@@ -334,7 +334,10 @@ def chunk_documents(
     is the parallelism. Straddling context windows across document
     boundaries instead is :func:`pack_sequences`.
     """
-    assert stride <= window, "stride > window would skip tokens entirely"
+    if stride > window:
+        raise ValueError(
+            f"stride {stride} > window {window} would skip tokens entirely"
+        )
     docs = t["documents"]
     # Starts advance by `stride` until a window reaches the last token:
     # last start = 1 + stride*ceil((n-window)/stride), which can sit
@@ -379,7 +382,10 @@ def mixture_weights(
     1-row total joined back as a broadcast literal) — at 100 TB the
     shuffle is #sources rows.
     """
-    assert alpha == 0.5, "alpha is pinned to 0.5 (sqrt) for oracle exactness"
+    if alpha != 0.5:
+        raise ValueError(
+            f"alpha is pinned to 0.5 (sqrt) for oracle exactness; got {alpha}"
+        )
     per_src = (
         t["documents"]
         .groupBy("source")

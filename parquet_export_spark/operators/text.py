@@ -1134,13 +1134,22 @@ def _bpe_token_counts_multi(
     doc_id join to recombine them — at 100 TB the corpus passes are
     the whole cost of the encode side.
 
-    ``cuts`` must be ascending and <= len(merges). Output column
-    ``tk`` is the per-cut count array, ``tk[i]`` for ``cuts[i]``.
+    ``cuts`` must be non-empty, ascending and <= len(merges); anything
+    else raises ``ValueError``. Output column ``tk`` is the per-cut
+    count array, ``tk[i]`` for ``cuts[i]``.
     """
     from pyspark.sql.functions import pandas_udf
 
     cut_list = list(cuts)
-    assert cut_list == sorted(cut_list) and cut_list[-1] <= len(merges)
+    if (
+        not cut_list
+        or cut_list != sorted(cut_list)
+        or cut_list[-1] > len(merges)
+    ):
+        raise ValueError(
+            f"cuts must be non-empty, ascending and <= {len(merges)} "
+            f"(the merge-table length); got {cut_list}"
+        )
 
     @pandas_udf("array<int>")
     def n_bpe_tokens_at(texts: pd.Series) -> pd.Series:
@@ -1216,27 +1225,20 @@ def bpe_encode_corpus_checked(
       under ANY merge table. A kernel that dropped or double-counted
       a word breaks the bound.
     - ``merge_monotone`` — encoding with the full merge table yields
-      <= tokens than with the first half of the table. Sound because
-      BOTH stages are prefix-stable: merge i of the greedy learner
-      depends only on merges < i (so the first n/2 rows of the
-      learned n-merge table ARE the n/2-merge table — pinned by
-      tests' prefix-stability test), and rank-order application means
-      the half-table encoding IS the full encoding's intermediate
-      symbol state — the remaining merges can only combine symbols
-      further.
+      <= tokens than with the first half of the table. Since the
+      fused multi-cut kernel (:func:`_bpe_token_counts_multi`) this
+      holds BY CONSTRUCTION: both counts are snapshots of one
+      shrinking symbol list, so the column can no longer catch an
+      encode-kernel bug at run time. The kernel is guarded instead by
+      ``test_bpe_multi_cut_kernel_matches_separate_passes`` (the
+      snapshots equal separate ``merges[:k]`` encodes) and
+      ``test_bpe_twin_contracts_on_crafted_corpus`` (the contracts on
+      a hand-built corpus), both in ``tests/test_round13_ops.py``.
     - ``zero_iff_empty`` — a document encodes to zero tokens exactly
       when it has zero words.
 
     Cost: ONE bounded merge-learn collect plus ONE fused corpus kernel
-    pass, paid by the certificate only. History: round 14 made the
-    learner run once (the half pass encodes against the learned
-    table's first-half SLICE — licensed by the same prefix-stability
-    property the monotonicity argument already rests on); round 15
-    fused the full and half encodes into one multi-cut kernel
-    (:func:`_bpe_token_counts_multi` — the half-table encoding IS the
-    full encoding's intermediate symbol state, so one pass snapshots
-    both) and moved the non-space count into the same select, turning
-    3 corpus scans + 2 doc_id joins into 1 scan + 0 joins."""
+    pass, paid by the certificate only."""
     merge_rows = bpe_learn_merges(t, n_merges).collect()
     merges = [
         (r.left, r.right)

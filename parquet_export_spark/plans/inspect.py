@@ -266,9 +266,10 @@ _LINT_RULES = (
 def lint_plan(df: DataFrame) -> list[str]:
     """Names of violated scale-lint rules for this plan (empty = clean).
 
-    Used by tests/test_plan_lint.py to sweep EVERY registry entry —
-    the systemic backstop behind the per-query plan pins: a new
-    operator cannot land a non-broadcast cartesian or a row-at-a-time
-    Python UDF without turning the suite red."""
+    tests/test_queries_oracle.py runs it on EVERY registry entry's
+    plan before that entry executes — the systemic backstop behind the
+    per-query plan pins: a new operator cannot land a non-broadcast
+    cartesian or a row-at-a-time Python UDF without turning the suite
+    red."""
     s = plan_string(df)
     return [name for name, pat in _LINT_RULES if re.search(pat, s)]

@@ -1530,15 +1530,13 @@ REGISTRY.update(
             _rel(S.pq_probe_incremental_checked),
             S.pq_probe_incremental_checked_oracle_sql(),
         ),
-        # round-13 (fourth conversion; rode ROUND_CHANGED post-window
-        # and now holds its r14 first-verdict slot, the r12
-        # neardup_clusters precedent): registered entry is the checked
-        # twin — the exact cosine_topk ground truth as replayable
-        # payload plus a deterministic per-query recall floor, value
-        # agreement, and the k-rows contract. ivf_topk deliberately
-        # stays rows-only: 2-of-8-cell probing makes its recall 0.3-0.9
-        # BY DESIGN (a floor would be vacuous or flappy); its
-        # determinism is pinned by the probe-==-refit twin.
+        # registered entry is the checked twin — the exact cosine_topk
+        # ground truth as replayable payload plus a deterministic
+        # per-query recall floor, value agreement, and the k-rows
+        # contract. ivf_topk deliberately stays rows-only: 2-of-8-cell
+        # probing makes its recall 0.3-0.9 BY DESIGN (a floor would be
+        # vacuous or flappy); its determinism is pinned by the
+        # probe-==-refit twin.
         "pq_topk": QuerySpec(
             _rel(S.pq_topk_checked), S.pq_topk_checked_oracle_sql()
         ),
@@ -4311,310 +4309,6 @@ REGISTRY.update(
         ),
     }
 )
-
-
-# ---------------------------------------------------------------------------
-# Registry ordering + freshness policy (round 10).
-#
-# The driver evaluates entries in registry order and caps each round at the
-# first 50, so verdict-hungry entries go first. Standing rotation rule, in
-# priority order: (1) anything new or whose code/oracle changed since its
-# last verdict, (2) the oldest verdicts first, (3) risk-ranked ties —
-# custom/composed operators before plain Catalyst shapes, oracle-bearing
-# before rows-only (pytest carries the rows-only evidence between driver
-# verdicts). Every entry left outside a window must be named with its tier.
-#
-# FRESHNESS TIERS (r9 verdict #4 — the registry is 5x the window, so a
-# flat "nothing older than N rounds" bar is arithmetically impossible;
-# this codifies what was previously de-facto):
-#   - WINDOW: the 50 entries verdicted this round (_VERDICT_PRIORITY).
-#   - CHANGED: entries whose plan/oracle changed THIS round
-#     (tests/test_oracle_sweep.py ROUND_CHANGED) — each swept through the
-#     driver-style compare at sf0.001/0.01/0.1 every pytest run, and
-#     front-loaded for the NEXT round's window.
-#   - PENDING: changed in a recent round, triple-SF-swept since, but the
-#     latest driver verdict predates the change — must take a window slot
-#     within 3 rounds of the change (PENDING_VERDICT below).
-#   - FROZEN: unchanged for >= 3 rounds, driver-green at least once, and
-#     re-proven by the per-run pytest oracle compare — these cycle through
-#     windows opportunistically but carry no freshness deadline.
-#   - Everything else must hold a driver verdict no older than 3 rounds.
-# The partition is enforced by tests/test_freshness.py against the actual
-# CORRECTNESS_r*.json artifacts — the policy cannot silently drift.
-#
-# ROUND-15 WINDOW, per the r14 verdict's task #1: the 16
-# PENDING_VERDICT(14) plan-changed entries take priority — the r14
-# optimization phase changed their plans AFTER the r14 window froze,
-# so their independent post-change driver verdicts land this round
-# (the in-repo triple-SF sweep has covered them on every pytest run
-# since the change):
-#   (a) the full PENDING_VERDICT(14) book — both certificate twins
-#       (ann_lsh_neighbors, neardup_minhash_lsh), both Markov gears,
-#       every consumer of the aggregate-then-join CC/SSSP hop
-#       (cc_doubling, sssp, graph_all_metrics, supplier_communities
-#       [_approx], community_modularity, supplier_graph_suite,
-#       cc_incremental_trade), ktruss, kcore, link_prediction and
-#       neardup_incremental — 16 slots;
-#   (b) the 4 remaining r8-verdicted FROZEN entries (the r14 rotation
-#       refreshed the alphabetically-first 43 of that 47-entry
-#       cohort; these close it out): unigram_freq_quality through
-#       winnowing_fingerprints;
-#   (c) this round's optimization targets (r14 verdict tasks #2/#3/#4/
-#       #6/#8): bpe_encode_corpus, knn_classify, spearman_corr_by_flag,
-#       weighted_median_price_by_segment, containment_join,
-#       remove_contained_docs, simjoin_prefix — any plan change they
-#       take this round gets its driver verdict in the same window
-#       (weighted_median_price_by_segment additionally ages past the
-#       3-round bar at this rotation and is NOT frozen, so the slot
-#       doubles as its freshness renewal);
-#   (d) 23 opportunistic FROZEN refreshes, oldest evidence first: the
-#       alphabetically-first 23 of the 46-entry r9-verdicted cohort
-#       (apdex_by_type through ngram_novelty_scores). They stay
-#       frozen — a refresh does not unfreeze.
-# Left OUTSIDE the window, each named by tier:
-#   - CHANGED (r15): tests/test_oracle_sweep.py ROUND_CHANGED —
-#     populated as this round's optimization work lands; entries
-#     changed this round that hold a window slot above get their
-#     post-change verdict directly, others enter PENDING_VERDICT(15).
-#   - PENDING: empty at rotation — all 16 r14-pending entries hold
-#     window slots above, draining the book.
-#   - FROZEN: the names in FROZEN below, now including the 38-entry
-#     r11-verdicted cohort that ages past the 3-round bar at this
-#     rotation (weighted_median_price_by_segment, the 39th, holds
-#     window slot (c) instead).
-#   - fresh (r12/r13/r14 verdicts, within the 3-round bar): the rest.
-#   - rows-only gears (no oracle by construction; pytest-bounded):
-#     ivf_topk, bpe_learn_merges (rows-only driver-checked r12) —
-#     2 total, both with docstring justifications the r13 verdict
-#     reviewed and accepted: ivf_topk's 2-of-8-cell probing makes
-#     recall 0.3-0.9 BY DESIGN — a floor would be vacuous or flappy;
-#     determinism is pinned class-wide by the probe-==-refit twins —
-#     and bpe_learn_merges is the sequential merge-table optimizer
-#     itself, whose exact-table parity lives in pytest.
-# Registration rule (pinned by test_registry_no_array_outputs): no
-# top-level array/map columns in any registered output — the driver's
-# pandas canonicalizer cannot hash list cells.
-# ---------------------------------------------------------------------------
-
-#: Bumped once per round, together with the window + ROUND_CHANGED
-#: rotation (tests/test_freshness.py pins it against the newest
-#: CORRECTNESS_r*.json artifact so it cannot go stale silently).
-CURRENT_ROUND = 15
-
-#: Rows-only entries holding a deliberate window slot this round (the
-#: driver records the weaker rows-only check for these — still a first
-#: driver contact; tests/test_freshness.py admits exactly this set).
-#: EMPTY since r13: every remaining rows-only gear has driver contact
-#: (bpe_learn_merges got its rows-only check in r12), so all 50 slots
-#: carry oracles.
-WINDOW_ROWS_ONLY: frozenset[str] = frozenset()
-
-_VERDICT_PRIORITY = [
-    # (a) the 16 PENDING_VERDICT(14) plan-changed entries (r14 verdict
-    #     task #1) — their post-change driver verdicts land now:
-    "ann_lsh_neighbors", "neardup_minhash_lsh",
-    "markov_stationary_types", "markov_removal_attribution",
-    "cc_doubling_trade_graph", "sssp_trade_graph", "graph_all_metrics",
-    "supplier_communities", "supplier_communities_approx",
-    "community_modularity_suppliers", "supplier_graph_suite",
-    "cc_incremental_trade", "ktruss_suppliers",
-    "link_prediction_suppliers", "kcore_suppliers",
-    "neardup_incremental",
-    # (b) the 4 remaining r8-verdicted FROZEN entries — oldest
-    #     evidence in the fleet, closing out the r8 cohort refresh:
-    "unigram_freq_quality", "window_running_sum",
-    "window_topk_per_group", "winnowing_fingerprints",
-    # (c) this round's optimization targets (r14 verdict tasks
-    #     #2/#3/#4/#6/#8) — a plan change here gets its verdict in
-    #     the same window; weighted_median_price_by_segment also ages
-    #     past the 3-round bar at this rotation (r11 verdict, never
-    #     frozen), so its slot doubles as the freshness renewal:
-    "bpe_encode_corpus", "knn_classify", "spearman_corr_by_flag",
-    "weighted_median_price_by_segment", "containment_join",
-    "remove_contained_docs", "simjoin_prefix",
-    # (d) 23 opportunistic FROZEN refreshes, oldest evidence first —
-    #     the alphabetically-first 23 of the 46-entry r9 cohort (the
-    #     remaining 23, novelty_incremental through weekly_revenue_wow,
-    #     stay frozen with no deadline and lead the next refresh
-    #     queue):
-    "apdex_by_type", "autocorr_hourly_counts", "bpe_token_counts",
-    "cc_trade_graph", "chi2_type_decile",
-    "degree_distribution_suppliers", "dup_family_size_histogram",
-    "dup_spans", "fano_burstiness", "feature_hash_vectors",
-    "funnel_time_to_convert", "heavy_hitters_cms",
-    "hhi_concentration_by_segment", "holt_linear_forecast",
-    "join_anti", "join_inner", "join_semi", "local_peaks_hourly",
-    "lpa_communities_suppliers", "merge_upsert_orders",
-    "multitouch_attribution", "nearest_event_join",
-    "ngram_novelty_scores",
-]
-
-#: FROZEN tier: unchanged >= 3 rounds, driver-green at least once,
-#: re-proven by the per-run pytest oracle compare. No freshness
-#: deadline; they re-enter windows opportunistically when slots free up.
-FROZEN = frozenset({
-    "agg_cube", "agg_distinct", "apply_changefeed",
-    "asof_purchase_attribution", "assoc_rules_parts", "balance_classes",
-    "bigram_lm_scores", "conditional_funcs", "corpus_quality_filter",
-    "curate_corpus_pipeline", "cusum_alarms", "date_funcs_extra",
-    "dedup_exact_keep_first", "dedup_incremental", "dedup_keep_best",
-    "embedding_norms", "events_hourly_rollup", "filter_project",
-    "fingerprints", "funnel_signup_click_purchase", "fuzzy_join_parts",
-    "gapfill_daily_revenue", "grouping_sets_revenue", "histogram_bins",
-    "histogram_equidepth", "incremental_rollup",
-    "interpolate_hourly_values", "join_left_nulls", "knn_classify",
-    "lang_id", "match_click_bursts", "null_handling_funcs",
-    "ols_value_by_hour", "percentiles_exact", "pivot_segment_counts",
-    "profile_columns", "q12_priority_shipclass",
-    "q13_order_count_distribution", "q22_inactive_rich_customers",
-    "q4_order_priority_exists", "quality_scores", "remove_dup_spans",
-    "resolve_part_entities", "rolling_user_features",
-    "salted_agg_user_value", "salted_skew_join", "scalar_date_funcs",
-    "scalar_json_funcs", "scalar_math_funcs", "scalar_string_funcs",
-    "scd2_point_in_time", "self_retrieval_ranks", "set_ops_all",
-    "simjoin_prefix", "sliding_rollup", "snapshot_diff",
-    "source_capped_sample", "sql_segment_top_spenders",
-    "stats_correlation", "stats_moments", "string_funcs_extra",
-    "tfidf_top_terms", "token_stats", "train_eval_split", "twap_by_type",
-    "unpivot_segment_counts", "validate_lake", "value_mad_outliers",
-    "variant_json_funcs", "window_distribution_ranks", "window_lag_lead",
-    "window_rank_dense",
-    # r12 freeze cohort: the 48 r8-verdicted entries aged past the
-    # 3-round bar at this rotation — all unchanged since r8 (none in
-    # any ROUND_CHANGED since), all driver-green, all re-proven by the
-    # per-run pytest oracle compare. They cycle back through windows
-    # opportunistically (the r5 cohort is being refreshed this round).
-    "agg_rollup", "anomaly_suite_events", "array_collect_funcs",
-    "assortativity_trade_graph", "benford_first_digit", "bm25_scores",
-    "byte_histograms", "chunk_documents", "clustering_coeff_suppliers",
-    "collocations_pmi", "containment_join", "cosine_topk",
-    "decile_features_events", "decontaminate_train", "dedup_canonical",
-    "dedup_exact", "event_transition_matrix", "ewma_halflife_values",
-    "interarrival_gap_histogram", "ks_distance_pairs",
-    "lang_quality_summary", "lateral_explode_items", "mixture_weights",
-    "multimodal_features", "neardup_embedding",
-    "neardup_jaccard_blocked", "neardup_ngram_jaccard",
-    "pack_sequences", "pareto_frontier_orders", "pgm_image_features",
-    "phash_pgm_dedup", "q11_important_parts", "q6_forecast_revenue",
-    "quality_weighted_sample", "random_walks_suppliers",
-    "remove_contained_docs", "repetition_ratios", "retention_cohorts",
-    "scd2_user_state", "seasonal_decompose_hourly", "set_ops",
-    "sql_cohort_ltv", "stratified_sample", "target_encode_loo",
-    "unigram_freq_quality", "window_running_sum",
-    "window_topk_per_group", "winnowing_fingerprints",
-    # r13 freeze cohort: the 50 r9-verdicted entries aged past the
-    # 3-round bar at this rotation — all unchanged since r9 (none in
-    # any ROUND_CHANGED since), all driver-green, all re-proven by the
-    # per-run pytest oracle compare. They cycle back through windows
-    # opportunistically (this round refreshes the r5 + r6 cohorts).
-    # (cogroup_user_funnel left this cohort in r14: its bucket count
-    # became corpus-derived — a changed entry cannot hide in the
-    # freezer; it holds an r14 window slot and re-freezes when it
-    # re-ages. sssp_trade_graph and community_modularity_suppliers left
-    # in the r14 OPTIMIZATION phase: the _sssp_core relaxation /
-    # _cc_doubling_core hop went aggregate-then-join — plan changes, so
-    # both ride the triple-SF sweep now and sit in PENDING_VERDICT for
-    # the r15 window. link_prediction_suppliers left for the same
-    # reason — its neighbor degree now rides the node-sized wedge
-    # input and the adjacency anti-join moved above the aggregate.)
-    "apdex_by_type", "autocorr_hourly_counts", "bpe_token_counts",
-    "cc_trade_graph", "chi2_type_decile",
-    "degree_distribution_suppliers",
-    "dup_family_size_histogram", "dup_spans", "fano_burstiness",
-    "feature_hash_vectors", "funnel_time_to_convert",
-    "heavy_hitters_cms", "hhi_concentration_by_segment",
-    "holt_linear_forecast", "join_anti", "join_inner", "join_semi",
-    "local_peaks_hourly",
-    "lpa_communities_suppliers", "merge_upsert_orders",
-    "multitouch_attribution", "nearest_event_join",
-    "ngram_novelty_scores", "novelty_incremental",
-    "odds_ratio_type_pairs", "order_cadence_by_customer",
-    "pareto_share_by_segment", "ppm_image_features",
-    "q1_pricing_summary", "rake_keyphrases", "rfm_segments",
-    "robust_scale_features", "seasonality_strength_hourly",
-    "session_entry_exit", "simpson_diversity_by_user",
-    "sort_limit_offset", "stats_higher_moments",
-    "type_affinity_jaccard", "user_activity_streaks", "user_path_topk",
-    "value_clusters_1d", "value_migration_matrix",
-    "video_frame_features", "wasserstein_distance_pairs",
-    "wav_audio_features", "weekly_revenue_wow",
-    # r14 freeze cohort: 49 of the 50 r10-verdicted entries aged past
-    # the 3-round bar at this rotation — all unchanged since r10 (none
-    # in any ROUND_CHANGED since), all driver-green, all re-proven by
-    # the per-run pytest oracle compare. The 50th, value_gini_by_type,
-    # changed this round (run-length pre-aggregation, r13 verdict #3)
-    # and holds an r14 window slot instead. They cycle back through
-    # windows opportunistically (this round refreshes the r8 cohort).
-    # (cc_doubling_trade_graph, cc_incremental_trade and
-    # graph_all_metrics left in the r14 OPTIMIZATION phase — the
-    # aggregate-then-join hop rewrite of _cc_doubling_core/_sssp_core
-    # is a plan change; all three ride the triple-SF sweep now and sit
-    # in PENDING_VERDICT for the r15 window. markov_stationary_types
-    # left for the same reason — its redundant-pass removal is a plan
-    # change; a changed entry cannot hide in the freezer.)
-    "agg_stats", "atkinson_index_by_segment", "bloom_prune_orders",
-    "churn_retention_monthly", "cramers_v_type_decile",
-    "cross_source_overlap", "dau_mau_stickiness", "dup_rate_by_source",
-    "event_ohlc", "forecast_backtest_mase",
-    "harmonic_closeness_suppliers", "hourly_value_percentiles",
-    "kaplan_meier_interorder", "label_centroid_sim",
-    "lift_curve_clicks_to_purchase", "lorenz_curve_deciles",
-    "mann_whitney_auc_pairs",
-    "new_returning_weekly", "next_event_examples", "pii_scan",
-    "q10_returned_items", "q17_small_quantity_revenue",
-    "q3_shipping_priority", "q5_revenue_by_nation",
-    "q7_nation_pair_volume", "q8_market_share", "q9_product_profit",
-    "quantile_transform_incremental", "quantile_transform_values",
-    "readability_scores", "roc_auc_clicks_to_purchase",
-    "seasonal_hour_baseline_loo", "session_concurrency_hourly",
-    "session_duration_histogram", "shard_for_training",
-    "spearman_corr_by_flag", "textrank_keywords", "token_diversity",
-    "tv_distance_pairs", "value_outliers", "vocab_coverage",
-    "weekly_mix_drift", "window_range_frame", "winsorize_values",
-    "zipf_slope_unigrams",
-    # r15 freeze cohort: 38 of the 39 r11-verdicted entries aged past
-    # the 3-round bar at this rotation — all unchanged since r11 (none
-    # in any ROUND_CHANGED since), all driver-green, all re-proven by
-    # the per-run pytest oracle compare. The 39th,
-    # weighted_median_price_by_segment, holds an r15 window slot
-    # instead (it is this round's examination target, r14 verdict
-    # task #6). They cycle back through windows opportunistically
-    # (this round refreshes the rest of the r8 cohort + the first
-    # half of the r9 cohort).
-    "agg_approx_distinct", "ann_lsh_buckets", "anova_oneway_types",
-    "approx_percentiles", "butterfly_pairs_trade",
-    "changepoint_scan_daily", "clamped_running_balance",
-    "conversion_ztest_by_click_tier",
-    "harmonic_closeness_exact2_suppliers", "hits_trade_graph",
-    "hll_rollup_users", "histogram_equidepth_approx",
-    "interval_overlap_join", "ivf_probe_incremental", "join_range",
-    "kendall_tau_qty_discount", "key_skew_report",
-    "leadlag_corr_types", "mann_kendall_trend_daily",
-    "pagerank_trade_graph", "pq_probe_incremental",
-    "prorate_discount_cents", "q14_promo_revenue_share",
-    "q15_top_supplier", "q16_supplier_counts",
-    "q18_large_orders_having", "q19_disjunctive_predicates",
-    "q20_heavy_suppliers", "q21_exclusive_return_suppliers",
-    "q2_min_balance_supplier", "runs_test_daily", "sessionize_batch",
-    "share_of_parent_rollup", "theil_sen_slope_daily",
-    "triangle_count_suppliers", "welch_ttest_pairs",
-    "wow_audience_overlap", "wow_mix_rate_decomposition",
-})
-
-#: PENDING tier: {entry: round its plan/oracle last changed}. The entry
-#: was triple-SF-swept in that round but its latest driver verdict
-#: predates the change; it must take a window slot within 3 rounds of
-#: the change (enforced by tests/test_freshness.py).
-#: r15: EMPTY at rotation — all 16 r14-pending entries (both
-#: certificate twins, both Markov gears, the eight CC/SSSP-hop
-#: consumers, ktruss, kcore, link_prediction, neardup_incremental)
-#: hold r15 window slots, draining the book. Entries changed this
-#: round OUTSIDE the window enter here with round 15.
-PENDING_VERDICT: dict[str, int] = {}
-
-REGISTRY = {k: REGISTRY[k] for k in _VERDICT_PRIORITY} | {
-    k: v for k, v in REGISTRY.items() if k not in _VERDICT_PRIORITY
-}
 
 
 def queries() -> dict[str, QueryFn]:

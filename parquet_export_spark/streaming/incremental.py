@@ -573,7 +573,7 @@ def cusum_stream(
     same total order as the batch twin.
 
     One deliberate difference from the batch twin, stated loudly: the
-    drift ``d`` is a FROZEN parameter here, not derived from the data
+    drift ``d`` is a fixed parameter here, not derived from the data
     — a streaming monitor must not let new data rewrite the reference
     it is monitored against (training-serving parity: calibrate d on
     a window with the batch operator, then freeze it). ``h`` is the

@@ -30,3 +30,9 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def pytest_collection_modifyitems(items):
+    """Run the registry-wide plan lint last: it reads the findings the
+    per-entry oracle tests recorded on the plans they built."""
+    items.sort(key=lambda item: item.path.name == "test_plan_lint.py")

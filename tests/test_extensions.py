@@ -4,12 +4,16 @@ ANN bucket behavior, multimodal decoder plumbing."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 from pyspark.sql import functions as F
 
+from parquet_export_spark.operators import curation as CU
 from parquet_export_spark.operators import dedup as D
 from parquet_export_spark.operators import multimodal as M
 from parquet_export_spark.operators import similarity as S
+from parquet_export_spark.operators import text as TX
 from parquet_export_spark.sources.lake import load_tables
 
 
@@ -313,8 +317,6 @@ def test_pack_sequences_multibucket_prefix_sum(spark, tables):
     cumsum regardless of bucket width. sf0.01 doc_ids all land in one
     PACK_BUCKET bucket, so force small buckets to exercise the
     bucket-offset join path (what a 1000-executor corpus looks like)."""
-    from parquet_export_spark.operators import curation as CU
-
     base = CU.pack_sequences(tables, ctx=128, bucket=1 << 40).collect()
     multi = CU.pack_sequences(tables, ctx=128, bucket=7).collect()
     assert sorted(map(tuple, base)) == sorted(map(tuple, multi))
@@ -331,8 +333,6 @@ def test_decontaminate_removed_docs_share_shingle(spark, tables):
     """Every train doc the scrub removes must actually share an n-gram
     with some eval doc, and every survivor must not (n=3 so the
     fixture corpus has non-trivial contamination)."""
-    from parquet_export_spark.operators import curation as CU
-
     docs = tables["documents"]
     h4 = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4)
     marked = docs.withColumn("h4", h4)
@@ -500,8 +500,6 @@ def test_stratified_sample_rates_are_nested(spark, tables):
     the lower-rate sample appears in the higher-rate sample of the
     same strata — the incremental-corpus property seeded-RNG
     sampling cannot provide. Also pins the per-stratum rates."""
-    from parquet_export_spark.operators import curation as CU
-
     lo = CU.stratified_sample(tables, rates={"en": 0.25}, default_rate=0.5)
     hi = CU.stratified_sample(tables, rates={"en": 0.5}, default_rate=0.75)
     lo_ids = {r.doc_id for r in lo.collect()}
@@ -520,8 +518,6 @@ def test_chunk_documents_covers_and_reconstructs(spark, tables):
     document's last token, and concatenating each chunk's first
     `stride` tokens (plus the final chunk's tail) reconstructs the
     document."""
-    from parquet_export_spark.operators import curation as CU
-
     W, S_ = 8, 5
     docs = {r.doc_id: r.text.split(" ")
             for r in tables["documents"].select("doc_id", "text").collect()}
@@ -550,14 +546,39 @@ def test_mixture_weights_normalized_and_monotone(spark, tables):
     """Weights form a distribution (sum 1) and follow token mass:
     sqrt is monotone, so source ranking by weight equals ranking by
     token count; expected_docs re-scales to the budget."""
-    from parquet_export_spark.operators import curation as CU
-
     rows = CU.mixture_weights(tables, budget=10_000).collect()
     assert abs(sum(r.weight for r in rows) - 1.0) < 1e-6
     by_tokens = sorted(rows, key=lambda r: r.n_tokens)
     by_weight = sorted(rows, key=lambda r: r.weight)
     assert [r.source for r in by_tokens] == [r.source for r in by_weight]
     assert abs(sum(r.expected_docs for r in rows) - 10_000) <= len(rows)
+
+
+_MERGES = [("a", "b"), ("ab", "c")]
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        partial(CU.chunk_documents, {}, window=4, stride=5),
+        partial(CU.mixture_weights, {}, alpha=0.7),
+        partial(TX._bpe_token_counts_multi, None, _MERGES, []),
+        partial(TX._bpe_token_counts_multi, None, _MERGES, [2, 1]),
+        partial(TX._bpe_token_counts_multi, None, _MERGES, [1, 3]),
+    ],
+    ids=[
+        "chunk_stride_gt_window",
+        "mixture_alpha",
+        "bpe_cuts_empty",
+        "bpe_cuts_descending",
+        "bpe_cuts_past_table",
+    ],
+)
+def test_precondition_raises_value_error(call):
+    """Input preconditions raise ValueError, so they hold under
+    ``python -O`` too. Each check fires before any Spark work."""
+    with pytest.raises(ValueError):
+        call()
 
 
 def test_fuzzy_dedup_keep_contract(spark, tables):

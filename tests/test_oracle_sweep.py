@@ -1,24 +1,19 @@
-"""The triple-SF oracle sweep, codified as a harness gate (round-6
-verdict #5).
+"""The triple-SF oracle sweep for changed registry entries.
 
 Why three scale factors: the decile_features_events incident — an
 interpolated-percentile oracle agreed with DuckDB at sf0.001 AND
 sf0.01 and diverged only at sf0.1, where a data value finally landed
 within one ulp of an engine-divergent interpolated boundary
 (pitfall 17). Two SFs are demonstrably not enough for value-sensitive
-operators, and builder discipline alone is exactly what lapses under
-deadline pressure — so the sweep is a TEST: every registry oracle
-marked new-or-changed this round runs through the driver-style
-compare at sf0.001, sf0.01 and sf0.1 on every pytest pass.
+operators, so every entry named in CHANGED runs through the
+oracle compare (tests/oracle_harness.py) at sf0.001, sf0.01 and sf0.1
+on every pytest pass.
 
-Maintenance contract (part of the new-operator checklist): when a
-round adds or semantically changes an oracle-bearing registry entry,
-its name goes into ROUND_CHANGED below; at the next round's rotation
-the previous round's names are cleared (their verdicts take over).
-The companion invariant test keeps the list honest against the
-registry. sf0.1 legs skip cleanly where that data is absent (CI
-without the big fixture), mirroring the harness's other sf-gated
-suites.
+Maintenance rule: a change that alters an entry's plan or oracle
+replaces CHANGED with the names it changed. The sweep leaves out the
+leg at the suite's own scale factor (conftest ``SF_DIR``), which
+tests/test_queries_oracle.py already checks for every entry. Legs
+whose data directory is absent skip cleanly.
 """
 
 from __future__ import annotations
@@ -28,74 +23,41 @@ import os
 import pytest
 
 from parquet_export_spark.queries import REGISTRY
+from tests.conftest import SF_DIR
 from tests.oracle_harness import compare
 
-#: registry entries whose Spark plan or oracle text is new or changed
-#: in the CURRENT round — each swept at all three SFs every pytest run.
-ROUND_CHANGED = [
-    # round 15: populated as this round's optimization work lands.
-    # Every entry added below is triple-SF-swept on each pytest run.
-    #
-    # r15 optimization (guide §2.4/§4, r14 verdict task #2): the twin's
-    # full and half encode passes fused into ONE multi-cut Arrow kernel
-    # (the half-table encoding is the full encoding's intermediate
-    # symbol state) with the non-space count in the same select — 3
-    # corpus scans + 2 doc_id joins -> 1 scan + 0 joins; the learner
-    # applies pending merges through one batched kernel per round and
-    # checkpoints lazily. Plan change, values and oracle unchanged;
-    # holds r15 window slot 21:
-    "bpe_encode_corpus",
-]
+#: registry entries whose Spark plan or oracle text changed most
+#: recently — each swept at all three SFs every pytest run.
+CHANGED = ["bpe_encode_corpus"]
 
-#: Previous round's list (r14), kept for the PENDING-tier bookkeeping in
-#: tests/test_freshness.py. Deduplicated AT DEFINITION via dict.fromkeys
-#: (r10 advice: a doubled name re-runs sweep legs for nothing and
-#: corrupts bookkeeping counts) — the companion invariant test enforces
-#: no-duplicates on both lists every run.
-PREV_ROUND_CHANGED = list(dict.fromkeys([
-    # r13-verdict/advice carryover fixes, all r14-verdicted green:
-    "label_pca", "semdedup_embedding", "value_gini_by_type",
-    "cogroup_user_funnel", "fuzzy_dedup_keep",
-    # r14 certificate-twin checkpoint work (bpe/pq_topk r14-verdicted;
-    # ann/minhash hold r15 window slots):
-    "bpe_encode_corpus", "pq_topk", "ann_lsh_neighbors",
-    "neardup_minhash_lsh",
-    # r14 optimization phase (all hold r15 window slots — their
-    # post-change driver verdicts land this round):
-    "markov_removal_attribution", "markov_stationary_types",
-    "cc_doubling_trade_graph", "sssp_trade_graph", "graph_all_metrics",
-    "supplier_communities", "supplier_communities_approx",
-    "community_modularity_suppliers", "supplier_graph_suite",
-    "cc_incremental_trade", "ktruss_suppliers",
-    "link_prediction_suppliers", "kcore_suppliers",
-    "neardup_incremental",
-]))
-
-SF_DIRS = [
-    "/root/testdata/sf0.001",
-    "/root/testdata/sf0.01",
-    "/root/testdata/sf0.1",
+#: the three scale-factor lakes sit side by side with the suite's own.
+SWEEP_DIRS = [
+    d
+    for d in (
+        os.path.join(os.path.dirname(SF_DIR), f"sf{sf}")
+        for sf in ("0.001", "0.01", "0.1")
+    )
+    if os.path.realpath(d) != os.path.realpath(SF_DIR)
 ]
 
 
 def test_round_changed_names_are_registered_oracles():
-    """The list must track real, oracle-bearing registry entries —
-    a renamed operator cannot silently drop out of the sweep — and
-    carry no duplicates (r9 advice: a doubled name re-runs its three
-    sweep legs for nothing and inflates the pass count)."""
-    assert len(ROUND_CHANGED) == len(set(ROUND_CHANGED)), sorted(
-        n for n in set(ROUND_CHANGED) if ROUND_CHANGED.count(n) > 1
+    """The list must track real, oracle-bearing registry entries — a
+    renamed operator cannot silently drop out of the sweep — and carry
+    no duplicates, which would re-run sweep legs for nothing."""
+    assert len(CHANGED) == len(set(CHANGED)), sorted(
+        n for n in set(CHANGED) if CHANGED.count(n) > 1
     )
-    for name in ROUND_CHANGED:
+    for name in CHANGED:
         assert name in REGISTRY, name
         assert REGISTRY[name].oracle, f"{name} is rows-only"
 
 
-@pytest.mark.parametrize("sf_dir", SF_DIRS)
-@pytest.mark.parametrize("name", ROUND_CHANGED)
-def test_changed_oracle_sweeps_all_sfs(spark, name, sf_dir):
-    if not os.path.isdir(sf_dir):
-        pytest.skip(f"{sf_dir} absent")
+@pytest.mark.parametrize("sweep_dir", SWEEP_DIRS)
+@pytest.mark.parametrize("name", CHANGED)
+def test_changed_oracle_sweeps_all_sfs(spark, name, sweep_dir):
+    if not os.path.isdir(sweep_dir):
+        pytest.skip(f"{sweep_dir} absent")
     spec = REGISTRY[name]
-    ok, msg = compare(spark, sf_dir, spec.fn, spec.oracle)
-    assert ok, f"{name} @ {sf_dir}: {msg}"
+    ok, msg = compare(spark, sweep_dir, spec.fn, spec.oracle)
+    assert ok, f"{name} @ {sweep_dir}: {msg}"

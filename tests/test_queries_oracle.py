@@ -1,4 +1,9 @@
-"""Oracle-differential test for every registered query (driver t2 replica)."""
+"""Oracle-differential test for every registered query (tests/oracle_harness.py).
+
+Each entry is built once: the registration rules (tests/registry_checks.py)
+are checked on the same DataFrame the oracle compare (or the rows-only
+count) then executes.
+"""
 
 from __future__ import annotations
 
@@ -6,6 +11,7 @@ import pytest
 
 from parquet_export_spark.queries import REGISTRY
 from tests.oracle_harness import compare
+from tests.registry_checks import assert_no_array_outputs, check_registrable, seen
 
 ORACLE_CASES = [(n, s) for n, s in REGISTRY.items() if s.oracle]
 ROWS_ONLY_CASES = [(n, s) for n, s in REGISTRY.items() if not s.oracle]
@@ -13,7 +19,12 @@ ROWS_ONLY_CASES = [(n, s) for n, s in REGISTRY.items() if not s.oracle]
 
 @pytest.mark.parametrize("name,spec", ORACLE_CASES, ids=[n for n, _ in ORACLE_CASES])
 def test_oracle_match(spark, sf_dir, name, spec):
-    ok, msg = compare(spark, sf_dir, spec.fn, spec.oracle)
+    def build(*args):
+        df = spec.fn(*args)
+        check_registrable(name, df)
+        return df
+
+    ok, msg = compare(spark, sf_dir, build, spec.oracle)
     assert ok, f"{name}: {msg}"
 
 
@@ -22,6 +33,7 @@ def test_oracle_match(spark, sf_dir, name, spec):
 )
 def test_rows_only_runs(spark, sf_dir, name, spec):
     df = spec.fn(spark, sf_dir)
+    check_registrable(name, df)
     assert df.count() >= 0
 
 
@@ -29,26 +41,11 @@ def test_rows_only_runs(spark, sf_dir, name, spec):
     "name,spec", list(REGISTRY.items()), ids=list(REGISTRY)
 )
 def test_registry_no_array_outputs(spark, sf_dir, name, spec):
-    """Registration rule: no top-level array/map columns in any
-    registered query output. The driver canonicalizes results via
-    pandas ``sort_values``, which raises "unhashable type: 'list'" on
-    list cells — array-valued results must be registered through a
-    stringified (to_json/array_join) projection; the array-typed
-    functions stay library API. Schema-only check: builds the plan,
-    never executes it."""
-    from pyspark.sql import types as T
-
-    schema = spec.fn(spark, sf_dir).schema
-    bad = [
-        f.name
-        for f in schema.fields
-        if isinstance(f.dataType, (T.ArrayType, T.MapType))
-    ]
-    assert not bad, (
-        f"{name}: top-level array/map columns {bad} would crash the "
-        "driver's pandas canonicalizer — serialize them (array_join/"
-        "to_json) in the registered projection"
-    )
+    """The no-top-level-array/map registration rule, per entry, on the
+    schema recorded when the tests above built the entry (built here
+    only if they did not run)."""
+    schema, _ = seen(spark, sf_dir, name)
+    assert_no_array_outputs(name, schema)
 
 
 def test_approx_distinct_within_rel_sd(spark, sf_dir):

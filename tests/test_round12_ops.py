@@ -2,8 +2,9 @@
 conversions (r11 verdict #4) and the adaptive k-truss peel (r11
 verdict #3).
 
-The twins' oracle parity is carried by the triple-SF sweep
-(tests/test_oracle_sweep.py ROUND_CHANGED); THIS file pins the
+The twins' oracle parity is carried by tests/test_queries_oracle.py,
+and by the triple-SF sweep while an entry is listed in
+tests/test_oracle_sweep.py CHANGED; THIS file pins the
 semantics the oracle cannot see — that the in-plan contract booleans
 are computed from real comparisons (injected duplicates must flip the
 underlying state, not just ride a literal TRUE), and that the sample

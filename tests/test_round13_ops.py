@@ -9,8 +9,9 @@ Covers the r12 verdict punch list and advice items:
   numerator, and the loud non-convergence error replacing the silent
   mass_conserved false-alarm path in fuzzy_dedup_keep.
 
-The twins' oracle parity is carried by the triple-SF sweep
-(tests/test_oracle_sweep.py ROUND_CHANGED); THIS file pins the
+The twins' oracle parity is carried by tests/test_queries_oracle.py,
+and by the triple-SF sweep while an entry is listed in
+tests/test_oracle_sweep.py CHANGED; THIS file pins the
 semantics the oracle cannot see.
 """
 

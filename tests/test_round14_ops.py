@@ -19,8 +19,9 @@ Covers the r13 verdict punch list and advice items:
 - advice (low): _connected_components' require_converged boundary — a
   graph that converges in exactly max_iter rounds must NOT raise.
 
-The twins' oracle parity is carried by the triple-SF sweep
-(tests/test_oracle_sweep.py ROUND_CHANGED); THIS file pins the
+The twins' oracle parity is carried by tests/test_queries_oracle.py,
+and by the triple-SF sweep while an entry is listed in
+tests/test_oracle_sweep.py CHANGED; THIS file pins the
 semantics the oracle cannot see.
 """
 

@@ -596,29 +596,6 @@ def test_phash_dedup_matches_numpy_bruteforce(spark):
     assert got == want and len(got) > 0
 
 
-def test_verdict_window_invariants():
-    """The driver hashes the FIRST 50 registry entries. Invariants the
-    rotation policy promises: exactly 50 slots, the registry's first
-    50 ARE the priority list, and (since round 6) every slot is
-    oracle-bearing — a rows-only slot returns err: no_oracle and
-    wastes its hash (the r5 verdict's finding #1). Round-12 carve-out:
-    a slot may be rows-only ONLY if declared in WINDOW_ROWS_ONLY (the
-    r11 verdict #2 directive — bpe_learn_merges takes its FIRST driver
-    contact as a rows-only check; a weaker check is not a wasted hash
-    when the alternative is no driver evidence at all). The exception
-    set's own invariants live in tests/test_freshness.py."""
-    from parquet_export_spark.queries import (
-        REGISTRY,
-        WINDOW_ROWS_ONLY,
-        _VERDICT_PRIORITY,
-    )
-
-    assert len(_VERDICT_PRIORITY) == 50
-    assert list(REGISTRY)[:50] == _VERDICT_PRIORITY
-    rows_only = [n for n in _VERDICT_PRIORITY if REGISTRY[n].oracle is None]
-    assert set(rows_only) == set(WINDOW_ROWS_ONLY)
-
-
 def test_assortativity_matches_numpy(spark):
     t = _small_tables(spark)
     edges = [(r.src, r.dst) for r in G._trade_edges(t).collect()]
