@@ -31,6 +31,12 @@ from parquet_export_spark.export.pipeline import export_lake
 from parquet_export_spark.session import get_spark
 from parquet_export_spark.tables import TABLES
 
+_CANONICAL_JSON_HELP = (
+    "re-serialize JSON columns compactly in the JVM; the text is"
+    " semantically equal to the source JSON, not byte-for-byte equal to"
+    " Python's json.dumps (non-ASCII raw, 1e-07 written 1.0E-7)"
+)
+
 
 def _make_source(source: str, offset: int | None):
     if source.startswith("jdbc:"):
@@ -123,7 +129,7 @@ def main(argv: list[str] | None = None) -> int:
     exp.add_argument("--out", required=True)
     exp.add_argument("--table", default=os.environ.get("DEBUG_TABLE") or None)
     exp.add_argument("--limit", type=int, default=None)
-    exp.add_argument("--canonical-json", action="store_true")
+    exp.add_argument("--canonical-json", action="store_true", help=_CANONICAL_JSON_HELP)
     docs = sub.add_parser("docs", help="regenerate QUERIES.md from the registry")
     docs.add_argument("--out", default="QUERIES.md")
     snap = sub.add_parser(
@@ -138,7 +144,7 @@ def main(argv: list[str] | None = None) -> int:
         help="comma-separated tables that changed; others republish "
         "metadata-only against the previous snapshot",
     )
-    snap.add_argument("--canonical-json", action="store_true")
+    snap.add_argument("--canonical-json", action="store_true", help=_CANONICAL_JSON_HELP)
     vac = sub.add_parser(
         "vacuum", help="drop snapshots past retention (reference-aware)"
     )

@@ -17,13 +17,23 @@ re-read to name files by row range.
 
 from __future__ import annotations
 
+import os
 import warnings
+from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
 
 
 def _jpath(spark: SparkSession, path: str):
     return spark._jvm.org.apache.hadoop.fs.Path(path)
+
+
+def _local_path(path: str) -> str | None:
+    """The OS path of a local (no scheme or ``file:``) path, else None."""
+    parsed = urlparse(path)
+    if parsed.scheme in ("", "file"):
+        return parsed.path if parsed.scheme else path
+    return None
 
 
 def _fs(spark: SparkSession, path: str):
@@ -79,9 +89,33 @@ def list_dir_names(spark: SparkSession, dir_path: str) -> list[str]:
 
 
 def rename(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename ``src`` to ``dst``; IOError if ``dst`` exists.
+
+    A local file takes ``os.rename`` with its ``.{name}.crc`` checksum
+    sidecar, as Hadoop's LocalFileSystem would move it, without a py4j
+    round-trip per file. Directories and remote schemes go through
+    Hadoop.
+    """
+    local_src, local_dst = _local_path(src), _local_path(dst)
+    if local_src is not None and local_dst is not None and os.path.isfile(local_src):
+        _rename_local_file(local_src, local_dst)
+        return
     fs = _fs(spark, src)
     if not fs.rename(_jpath(spark, src), _jpath(spark, dst)):
         raise IOError(f"rename failed: {src} -> {dst}")
+
+
+def _rename_local_file(src: str, dst: str) -> None:
+    if os.path.lexists(dst):
+        raise IOError(f"rename failed: {src} -> {dst} (target exists)")
+    os.rename(src, dst)
+    src_crc, dst_crc = (
+        os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc") for p in (src, dst)
+    )
+    if os.path.exists(src_crc):
+        os.replace(src_crc, dst_crc)
+    elif os.path.exists(dst_crc):
+        os.remove(dst_crc)  # a stale sidecar would fail the next checksummed read
 
 
 def delete(spark: SparkSession, path: str, recursive: bool = False) -> bool:
@@ -192,13 +226,11 @@ def parquet_row_count(spark: SparkSession, path: str) -> int:
     classpath), so object-store footers are readable without a
     Python-side S3 client.
     """
-    from urllib.parse import urlparse
-
-    parsed = urlparse(path)
-    if parsed.scheme in ("", "file"):
+    local = _local_path(path)
+    if local is not None:
         import pyarrow.parquet as pq
 
-        return pq.read_metadata(parsed.path if parsed.scheme else path).num_rows
+        return pq.read_metadata(local).num_rows
     jvm = spark._jvm
     infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         _jpath(spark, path), spark._jsc.hadoopConfiguration()

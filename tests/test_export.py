@@ -124,6 +124,112 @@ def test_json_semantic_fidelity(exported, spark):
                 assert json.loads(got[col]) == json.loads(src[col])
 
 
+JSON_TABLES = ("compiled_contracts", "verified_contracts")
+
+
+@pytest.fixture(scope="module")
+def canonical_exported(spark, tmp_path_factory):
+    out_dir = str(tmp_path_factory.mktemp("canonical_lake"))
+    dfs = fixture_dataframes(spark, N)
+    tables = {name: TABLES[name] for name in JSON_TABLES}
+    export_lake(
+        spark, lambda s, spec: dfs[spec.name], out_dir, tables=tables, canonical_json=True
+    )
+    return out_dir
+
+
+@pytest.mark.parametrize("table", JSON_TABLES)
+def test_canonical_json_export(canonical_exported, spark, table):
+    """``canonical_json=True`` rewrites every JSON column: parse-equal
+    to the source, and on these ASCII fixtures byte-equal to Python's
+    compact ``json.dumps`` (the fixtures use ``", "``/``": "``)."""
+    df = spark.read.parquet(os.path.join(canonical_exported, table))
+    rows = {r["id"]: r for r in df.collect()}
+    json_columns = TABLES[table].json_columns
+    for src in make_fixture_rows(N)[table]:
+        got = rows[src["id"]]
+        for col in json_columns:
+            if src[col] is None:
+                assert got[col] is None
+            else:
+                assert json.loads(got[col]) == json.loads(src[col])
+                assert got[col] == json.dumps(json.loads(src[col]), separators=(",", ":"))
+
+
+def _canonicalize(spark, values: list[str | None]) -> list[str | None]:
+    from parquet_export_spark.export.normalize import normalize_json_columns
+    from parquet_export_spark.tables import TableSpec
+
+    spec = TableSpec(name="t", datatypes={"i": "Int64", "c": "json"}, rows_per_file=100)
+    df = spark.createDataFrame(list(enumerate(values)), "i long, c string")
+    out = normalize_json_columns(df, spec, canonical=True)
+    return [r.c for r in out.orderBy("i").collect()]
+
+
+#: raw JSON text -> canonical text; all parse-equal to ``json.loads``
+JSON_EDGE_CASES = {
+    None: None,
+    "null": "null",
+    '  "say \\"hi\\""': '"say \\"hi\\""',
+    '"é"': '"é"',
+    '"\\u00e9"': '"é"',
+    "123456789012345678901234567890": "123456789012345678901234567890",
+    "1e-07": "1.0E-7",
+    '{"name": "Zürich", "tags": ["日本"]}': '{"name":"Zürich","tags":["日本"]}',
+    "[1, [2, [3, []]], {}]": "[1,[2,[3,[]]],{}]",
+    "{}": "{}",
+    "[]": "[]",
+    '\t"123"': '"123"',
+    '{"a": true, "b": null, "c": 1.5}': '{"a":true,"b":null,"c":1.5}',
+}
+
+
+@pytest.fixture(scope="module")
+def canonical_edge_cases(spark):
+    raws = list(JSON_EDGE_CASES)
+    return dict(zip(raws, _canonicalize(spark, raws)))
+
+
+@pytest.mark.parametrize("raw", list(JSON_EDGE_CASES), ids=repr)
+def test_canonical_json_edge_cases(canonical_edge_cases, raw):
+    got = canonical_edge_cases[raw]
+    assert got == JSON_EDGE_CASES[raw]
+    if raw is not None:
+        assert json.loads(got) == json.loads(raw)
+
+
+def test_canonical_json_invalid_raises_naming_column(spark):
+    from pyspark.errors import SparkRuntimeException
+
+    with pytest.raises(SparkRuntimeException, match=r"invalid JSON in column t\.c"):
+        _canonicalize(spark, ['{"a": 1}', '{"a":'])
+
+
+def test_canonical_json_documented_divergences(spark):
+    """Deliberate differences from ``json.dumps(json.loads(v))``. Neither
+    real source (Postgres ``jsonb::text``, a parquet lake written from
+    it) has duplicate keys or trailing content; a number beyond double
+    range has no JSON form in Python either."""
+    dup, trailing, huge = _canonicalize(spark, ['{"a": 1, "a": 2}', '{"a": 1} xyz', "1E+400"])
+    assert dup == '{"a":1,"a":2}'  # duplicate keys kept (Python keeps the last)
+    assert trailing == '{"a":1}'  # trailing content accepted (Python raises)
+    assert huge == '"Infinity"'  # a JSON string (Python writes bare Infinity)
+
+
+def test_canonical_json_parses_each_column_once(spark):
+    """Each JSON column's ``get_json_object`` survives optimization
+    exactly once: the CASE branches read one parsed value, not one
+    parse each."""
+    from parquet_export_spark.export.normalize import enforce_schema, normalize_json_columns
+
+    spec = TABLES["compiled_contracts"]
+    df = enforce_schema(fixture_dataframes(spark, 5)[spec.name], spec)
+    out = normalize_json_columns(df, spec, canonical=True)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert len(spec.json_columns) > 1
+    assert plan.count("get_json_object(") == len(spec.json_columns)
+
+
 def test_unknown_dtype_fails_fast():
     from parquet_export_spark.tables import spark_type
 
@@ -210,6 +316,33 @@ def test_fs_shim_roundtrip(spark, tmp_path):
     assert fs.list_names(spark, base, recursive=True) == ["a/c.txt"]
     assert fs.delete(spark, fs.join(base, "a"), recursive=True)
     assert not fs.exists(spark, fs.join(base, "a"))
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"])
+def test_fs_local_rename_moves_checksum_sidecar(spark, tmp_path, scheme):
+    """A local file rename carries its ``.{name}.crc`` sidecar along, so
+    Hadoop's checksummed read of the new name still verifies."""
+    from parquet_export_spark.export import fs
+
+    base = f"{scheme}{tmp_path}"
+    fs.write_text(spark, fs.join(base, "a.json"), '{"k": 1}')
+    assert sorted(os.listdir(tmp_path)) == [".a.json.crc", "a.json"]
+    fs.rename(spark, fs.join(base, "a.json"), fs.join(base, "b.json"))
+    assert sorted(os.listdir(tmp_path)) == [".b.json.crc", "b.json"]
+    assert fs.read_text(spark, fs.join(base, "b.json")) == '{"k": 1}'
+
+
+def test_fs_local_rename_refuses_existing_target(spark, tmp_path):
+    from parquet_export_spark.export import fs
+
+    base = str(tmp_path)
+    fs.write_text(spark, fs.join(base, "a.json"), "A")
+    fs.write_text(spark, fs.join(base, "b.json"), "B")
+    with pytest.raises(IOError, match="target exists"):
+        fs.rename(spark, fs.join(base, "a.json"), fs.join(base, "b.json"))
+    assert fs.read_text(spark, fs.join(base, "a.json")) == "A"
+    assert fs.read_text(spark, fs.join(base, "b.json")) == "B"
+    assert sorted(os.listdir(tmp_path)) == [".a.json.crc", ".b.json.crc", "a.json", "b.json"]
 
 
 def test_fs_shim_nonlocal_scheme(spark, tmp_path, sf_dir):
