@@ -552,7 +552,7 @@ def main() -> None:
 
             with ThreadPoolExecutor(max_workers=3) as pool:
                 files = dict(pool.map(one, tbls))
-            write_manifest(out_dir, files)
+            write_manifest(out_dir, files, spark)
             best = min(best, time.perf_counter() - t0)
         finally:
             shutil.rmtree(out_dir, ignore_errors=True)
@@ -609,7 +609,7 @@ def main() -> None:
             files = write_table(
                 ev, out_dir, spec, partition_by=["day"]
             )
-            write_manifest(out_dir, {"events": files})
+            write_manifest(out_dir, {"events": files}, spark)
             one_day = ev.select(F.min("day")).first()[0]
             pruned = spark.read.parquet(out_dir + "/events").filter(
                 F.col("day") == F.lit(one_day)

@@ -64,7 +64,9 @@ def _make_source(source: str, offset: int | None):
 
 def _gen_queries_md(out_path: str) -> int:
     """Regenerate QUERIES.md from the live registry (name, module,
-    oracle status, first docstring line). No Spark session needed."""
+    oracle status, purpose). The purpose of a SQL entry is the leading
+    ``-- `` line of its SQL; of any other entry, the first line of its
+    operator's docstring. No Spark session needed."""
     from parquet_export_spark.queries import REGISTRY
 
     lines = [
@@ -81,8 +83,8 @@ def _gen_queries_md(out_path: str) -> int:
     # documented callable resolves by NAME against the operators
     # package (`<name>_checked` first — twins keep the registry name
     # but run the certificate variant).  The closure walk below is the
-    # fallback for entries whose name is registry-local (pure-SQL
-    # entries, composed suites).
+    # fallback for entries whose name is registry-local (composed
+    # suites).
     import importlib
     import pkgutil
 
@@ -98,6 +100,12 @@ def _gen_queries_md(out_path: str) -> int:
                 by_name.setdefault(attr, v)
 
     for name, spec in REGISTRY.items():
+        oracle = "DuckDB hash-match" if spec.oracle else "rows-only (approx/iterative)"
+        sql = getattr(spec.fn, "sql", None)
+        if sql is not None:
+            purpose = sql.strip().splitlines()[0].removeprefix("-- ")
+            lines.append(f"| `{name}` | queries | {oracle} | {purpose} |")
+            continue
         op = by_name.get(f"{name}_checked") or by_name.get(name)
         if op is None:
             op = spec.fn
@@ -113,7 +121,6 @@ def _gen_queries_md(out_path: str) -> int:
         mod = op.__module__.rsplit(".", 1)[-1]
         doc = (op.__doc__ or "").strip().splitlines()
         purpose = doc[0].rstrip(".") if doc else ""
-        oracle = "DuckDB hash-match" if spec.oracle else "rows-only (approx/iterative)"
         lines.append(f"| `{name}` | {mod} | {oracle} | {purpose} |")
     with open(out_path, "w") as fh:
         fh.write("\n".join(lines) + "\n")

@@ -1,1 +1,1 @@
-from parquet_export_spark.export.pipeline import export_lake, export_table  # noqa: F401
+from parquet_export_spark.export.pipeline import export_lake  # noqa: F401

@@ -16,7 +16,6 @@ names even when the upload failed (main.py:171-176, 240-243).
 from __future__ import annotations
 
 import json
-import os
 import time
 from datetime import datetime, timezone
 
@@ -46,23 +45,18 @@ def build_manifest(
 def write_manifest(
     out_dir: str,
     files_per_table: dict[str, list[str]],
-    spark=None,
+    spark,
     metrics: dict[str, dict] | None = None,
 ) -> str:
     """Write ``manifest.json`` under ``out_dir``.
 
-    With a ``spark`` session the write goes through the Hadoop
-    FileSystem API (export/fs.py) and works on any scheme the export
-    itself wrote to (file:/hdfs:/s3a: — the reference uploads the
-    manifest to the same bucket last, main.py:282). Without one, plain
-    local I/O (kept for driverless unit use).
+    The write goes through the Hadoop FileSystem API (export/fs.py), so
+    it works on any scheme the export itself wrote to (file:/hdfs:/s3a:
+    — the reference uploads the manifest to the same bucket last,
+    main.py:282), and ``fs.write_text`` replaces the file atomically: a
+    concurrent reader never sees it truncated or half-written.
     """
-    text = json.dumps(build_manifest(files_per_table, metrics=metrics), indent=2)
-    if spark is not None:
-        from parquet_export_spark.export import fs
+    from parquet_export_spark.export import fs
 
-        return fs.write_text(spark, fs.join(out_dir, "manifest.json"), text)
-    path = os.path.join(out_dir, "manifest.json")
-    with open(path, "w") as fh:
-        fh.write(text)
-    return path
+    text = json.dumps(build_manifest(files_per_table, metrics=metrics), indent=2)
+    return fs.write_text(spark, fs.join(out_dir, "manifest.json"), text)

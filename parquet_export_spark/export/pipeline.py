@@ -28,17 +28,6 @@ from parquet_export_spark.export.writer import write_table
 from parquet_export_spark.tables import TABLES, TableSpec
 
 
-def export_table(
-    df: DataFrame,
-    out_dir: str,
-    spec: TableSpec,
-    canonical_json: bool = False,
-) -> list[str]:
-    df = enforce_schema(df, spec)
-    df = normalize_json_columns(df, spec, canonical=canonical_json)
-    return write_table(df, out_dir, spec)
-
-
 def export_table_with_metrics(
     df: DataFrame,
     out_dir: str,

@@ -39,7 +39,6 @@ def write_table(
     df: DataFrame,
     out_dir: str,
     spec: TableSpec,
-    rename_row_ranges: bool = True,
     partition_by: list[str] | None = None,
 ) -> list[str]:
     """Write ``df`` under ``{out_dir}/{spec.name}/``; return file names.
@@ -64,9 +63,7 @@ def write_table(
         writer.partitionBy(*partition_by).parquet(table_dir)
         return fs.list_names(spark, table_dir, recursive=True)
     writer.parquet(table_dir)
-    if rename_row_ranges:
-        return _rename_to_row_ranges(spark, table_dir, spec)
-    return [n for n in fs.list_names(spark, table_dir) if n.endswith(".parquet")]
+    return _rename_to_row_ranges(spark, table_dir, spec)
 
 
 def _rename_to_row_ranges(spark, table_dir: str, spec: TableSpec) -> list[str]:

@@ -18,21 +18,6 @@ from parquet_export_spark.functions.scalar import davg, dsum
 # --------------------------------------------------------------------------
 
 
-def q4_order_priority_exists(t: dict[str, DataFrame]) -> DataFrame:
-    """TPC-H Q4 shape: EXISTS correlated subquery -> left-semi join."""
-    orders = t["orders"].filter(
-        (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp_ntz"))
-        & (F.col("o_orderdate") < F.lit("1996-10-01").cast("timestamp_ntz"))
-    )
-    returned = t["lineitem"].filter(F.col("l_returnflag") == "R")
-    return (
-        orders.join(returned, orders.o_orderkey == returned.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
 def q17_small_quantity_revenue(t: dict[str, DataFrame]) -> DataFrame:
     """TPC-H Q17 shape: correlated scalar subquery (per-part avg)
     joined back against the brand-restricted fact slice.
@@ -60,85 +45,6 @@ def q17_small_quantity_revenue(t: dict[str, DataFrame]) -> DataFrame:
         .agg(
             dsum("l_extendedprice").alias("total_price"),
             F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-def q18_large_orders_having(t: dict[str, DataFrame]) -> DataFrame:
-    """TPC-H Q18 shape: groupBy + HAVING on the aggregate."""
-    li, orders, cust = t["lineitem"], t["orders"], t["customer"]
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(dsum("l_quantity").alias("total_qty"))
-        .filter(F.col("total_qty") > 250)
-    )
-    return (
-        big.join(orders, big.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .select("c_custkey", "c_name", "o_orderkey", "o_orderdate", "total_qty")
-        .orderBy(F.desc("total_qty"), "o_orderkey")
-    )
-
-
-def q19_disjunctive_predicates(t: dict[str, DataFrame]) -> DataFrame:
-    """TPC-H Q19 shape: OR-of-ANDs join predicate; Catalyst extracts
-    the common p_partkey equi-condition and keeps the rest residual."""
-    li, part = t["lineitem"], t["part"]
-    cond = (li.l_partkey == part.p_partkey) & (
-        ((part.p_brand == "Brand#11") & (part.p_size <= 15) & (li.l_quantity >= 1) & (li.l_quantity <= 20))
-        | ((part.p_brand == "Brand#21") & (part.p_size <= 30) & (li.l_quantity >= 10) & (li.l_quantity <= 30))
-        | ((part.p_type == "PROMO") & (li.l_discount >= 0.05))
-    )
-    return (
-        li.join(part, cond)
-        .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), scale=6).alias(
-                "revenue"
-            ),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-def q22_inactive_rich_customers(t: dict[str, DataFrame]) -> DataFrame:
-    """TPC-H Q22 shape: scalar subquery (global avg) + anti join."""
-    cust = t["customer"]
-    # "inactive" = no order since 1999 (every customer has SOME order
-    # in the synthetic data, so plain no-orders would be vacuous)
-    recent = t["orders"].filter(
-        F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp_ntz")
-    )
-    avg_bal = cust.filter(F.col("c_acctbal") > 0).agg(
-        davg("c_acctbal").alias("ab")
-    )
-    return (
-        cust.join(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("ab"))
-        .join(recent, cust.c_custkey == recent.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            dsum("c_acctbal").alias("total_bal"),
-        )
-        .orderBy("c_mktsegment")
-    )
-
-
-def q14_promo_revenue_share(t: dict[str, DataFrame]) -> DataFrame:
-    """TPC-H Q14 shape: conditional aggregate ratio."""
-    li = t["lineitem"].filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp_ntz"))
-    )
-    part = t["part"]
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .agg(
-            (
-                dsum(F.when(F.col("p_type") == "PROMO", rev).otherwise(0.0), scale=6)
-                / dsum(rev, scale=6)
-            ).alias("promo_share")
         )
     )
 
@@ -287,7 +193,7 @@ def sessionize_batch(
 
 
 # --------------------------------------------------------------------------
-# Pivot / unpivot / grouping sets / null & array functions
+# Pivot / grouping sets / array functions
 # --------------------------------------------------------------------------
 
 _SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
@@ -304,18 +210,6 @@ def pivot_segment_counts(t: dict[str, DataFrame]) -> DataFrame:
         .agg(F.count(F.lit(1)))
         .na.fill(0, _SEGMENTS)
         .orderBy("c_nationkey")
-    )
-
-
-def unpivot_segment_counts(t: dict[str, DataFrame]) -> DataFrame:
-    """Unpivot (melt) the pivoted table back to long form."""
-    wide = pivot_segment_counts(t)
-    return (
-        wide.unpivot(
-            "c_nationkey", _SEGMENTS, "segment", "n_customers"
-        )
-        .filter(F.col("n_customers") > 0)
-        .orderBy("c_nationkey", "segment")
     )
 
 
@@ -379,28 +273,6 @@ def dedup_keep_best(t: dict[str, DataFrame]) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("doc_id", "lang", "source", "n_chars", "bag_key")
         .orderBy("doc_id")
-    )
-
-
-def null_handling_funcs(t: dict[str, DataFrame]) -> DataFrame:
-    """coalesce / nullif / nvl2 / null-safe equality over the left-join
-    null surface."""
-    o = t["orders"].filter(F.col("o_totalprice") > 400_000)
-    c = t["customer"]
-    j = c.join(o, c.c_custkey == o.o_custkey, "left")
-    return (
-        j.select(
-            "c_custkey",
-            F.coalesce("o_orderkey", F.lit(-1)).alias("orderkey_or_default"),
-            F.nullif(F.col("o_orderstatus"), F.lit("F")).alias("status_nullif_f"),
-            F.when(F.col("o_orderkey").isNull(), "none").otherwise("some").alias(
-                "has_big_order"
-            ),
-            F.col("o_orderkey").eqNullSafe(F.lit(None).cast("long")).alias(
-                "is_null_safe_eq"
-            ),
-        )
-        .orderBy("c_custkey", "orderkey_or_default")
     )
 
 
@@ -504,44 +376,6 @@ def retention_cohorts(t: dict[str, DataFrame]) -> DataFrame:
 # --------------------------------------------------------------------------
 # Event-sequence transitions (Markov matrix over per-user event streams)
 # --------------------------------------------------------------------------
-
-
-def event_transition_matrix(t: dict[str, DataFrame]) -> DataFrame:
-    """First-order transition matrix over per-user event sequences:
-    for every (event_type -> next event_type) step, the count and the
-    conditional probability P(next | current).
-
-    The sequence-analytics primitive behind funnel mining and
-    session-path models: order each user's events by time, pair each
-    with its successor (one ``lead`` window over the same user_id
-    shuffle sessionization uses), then aggregate pairs. Ties on ``ts``
-    break on event_id so the sequence is total and engine-independent.
-
-    Determinism: counts are exact integers; the probability is the one
-    final double division of two BIGINTs, rounded — the module's
-    standard exact-accumulation rule. At 100 TB: one shuffle on
-    user_id (window), one partial+final aggregate on the 2-column key;
-    the per-type totals reuse the pair aggregate via a window over the
-    tiny result, not a second pass over the events.
-    """
-    ev = t["events"]
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        ev.select("user_id", "ts", "event_id", "event_type")
-        .withColumn("next_type", F.lead("event_type").over(w))
-        .filter(F.col("next_type").isNotNull())
-    )
-    counts = pairs.groupBy("event_type", "next_type").agg(
-        F.count(F.lit(1)).alias("n_transitions")
-    )
-    total = F.sum("n_transitions").over(Window.partitionBy("event_type"))
-    prob = F.round(
-        F.col("n_transitions").cast("double") / total.cast("double"), 9
-    )
-    return (
-        counts.withColumn("prob", prob)
-        .orderBy("event_type", "next_type")
-    )
 
 
 #: fixed-point scale for the Markov power iteration (1e12: six ppm
@@ -1506,64 +1340,6 @@ def assoc_rules_parts_oracle_sql(
     ORDER BY conf_ppm DESC, antecedent, consequent
     LIMIT {top_n}
     """
-
-
-def pareto_frontier_orders(t: dict[str, DataFrame]) -> DataFrame:
-    """Per-segment Pareto frontier of (order date, order total): the
-    orders not dominated by any later-or-equal-dated, higher-priced
-    order — the skyline-query shape (multi-objective "best tradeoff"
-    scans: freshest AND largest orders per market segment, with every
-    frontier point a distinct tradeoff).
-
-    Two-phase plan that keeps the window off the fact table:
-
-    1. Reduce to one candidate per (segment, date) — only the max
-       total on a given date can be on the frontier. This is an
-       ordinary grouped aggregate (map-side combinable), and bounds
-       the window input to segments x distinct dates regardless of
-       order volume.
-    2. One cumulative-max window per segment over dates DESCENDING:
-       a candidate is on the frontier iff its total strictly exceeds
-       the running max of all LATER dates (rows between unbounded
-       preceding and 1 preceding after the desc sort). Date-bounded
-       input (~2.4k dates x 5 segments), so the sort is trivial at
-       any SF — the same pre-aggregate-then-window discipline as
-       curation.pack_sequences.
-
-    Dominance uses the exact decimal totals; the output echoes them
-    unrounded (presentation-exact in both engines).
-    """
-    o = t["orders"].join(
-        t["customer"].select(
-            F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-        ),
-        "o_custkey",
-    )
-    daily_best = o.groupBy("c_mktsegment", "o_orderdate").agg(
-        F.max("o_totalprice").alias("best_total")
-    )
-    w = (
-        Window.partitionBy("c_mktsegment")
-        .orderBy(F.desc("o_orderdate"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        daily_best.withColumn("later_max", F.max("best_total").over(w))
-        .filter(
-            F.col("later_max").isNull()
-            | (F.col("best_total") > F.col("later_max"))
-        )
-        .select(
-            "c_mktsegment",
-            "o_orderdate",
-            # presentation cast: decimal(15,2) -> double is exact
-            # (< 2^53) and sidesteps the pandas dtype divergence
-            # (Spark decimals arrive as Decimal objects, DuckDB
-            # decimals as float64 — repr-unequal even when equal)
-            F.col("best_total").cast("double").alias("best_total"),
-        )
-        .orderBy("c_mktsegment", F.desc("o_orderdate"))
-    )
 
 
 EWMA_LAGS = 16
@@ -3320,66 +3096,6 @@ def user_activity_streaks_oracle_sql() -> str:
         FROM per_island
         GROUP BY user_id
         ORDER BY user_id
-        """
-
-
-def simpson_diversity_by_user(t: dict[str, DataFrame]) -> DataFrame:
-    """Behavioral diversity per user: the Simpson index 1 - Σ p_t²
-    over the user's event-type mix — 0 for a one-note user, toward
-    1 - 1/k for an even k-type mix. The logarithm-free diversity
-    measure (Shannon entropy needs libm ln, whose last-ulp behavior
-    differs across engines — the collocations_pmi lesson; Simpson's
-    polynomial form is exact): 1 - Σ n_t² / n² evaluates as exact
-    int64 cross-products folded into ONE IEEE divide, ROUND(.., 9).
-
-    Plan: one (user, type) count, one user-sized aggregate. Envelope:
-    Σ n_t² <= n², safe to ~3e9 events/user in int64.
-
-    Output: (user_id, n_events, n_types, simpson).
-    """
-    counts = (
-        t["events"]
-        .groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return (
-        counts.groupBy("user_id")
-        .agg(
-            F.sum("c").cast("long").alias("n_events"),
-            F.count(F.lit(1)).cast("long").alias("n_types"),
-            F.sum(F.col("c") * F.col("c")).cast("long").alias("sq"),
-        )
-        .select(
-            "user_id",
-            "n_events",
-            "n_types",
-            F.round(
-                F.lit(1.0)
-                - F.col("sq").cast("double")
-                / (F.col("n_events") * F.col("n_events")).cast("double"),
-                9,
-            ).alias("simpson"),
-        )
-        .orderBy("user_id")
-    )
-
-
-def simpson_diversity_oracle_sql() -> str:
-    return """
-        WITH counts AS (
-          SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS c
-          FROM events GROUP BY user_id, event_type),
-        agg AS (
-          SELECT user_id,
-                 CAST(SUM(c) AS BIGINT) AS n_events,
-                 CAST(COUNT(*) AS BIGINT) AS n_types,
-                 CAST(SUM(c * c) AS BIGINT) AS sq
-          FROM counts GROUP BY user_id)
-        SELECT user_id, n_events, n_types,
-               ROUND(1.0 - CAST(sq AS DOUBLE)
-                     / CAST(n_events * n_events AS DOUBLE), 9)
-                   AS simpson
-        FROM agg ORDER BY user_id
         """
 
 

@@ -410,49 +410,6 @@ def mixture_weights(
     )
 
 
-def next_event_examples(
-    t: dict[str, DataFrame], context_len: int = 3
-) -> DataFrame:
-    """Supervised training-example construction from the event stream:
-    for every event with at least ``context_len`` predecessors in its
-    user's timeline, emit (context of the last ``context_len`` event
-    types, label = this event's type) — the behavior-sequence dataset
-    build (next-action prediction) in one declarative pass.
-
-    One shuffle on ``user_id``; the lag window evaluates streamingly
-    within each user partition (per-user state is ``context_len``
-    rows, not the timeline). The context is emitted as a
-    space-joined string — model-input-shaped, and hashable by the
-    driver canonicalizer (registry no-array rule). Deterministic
-    ordering: (ts, event_id) is a total order per user.
-
-    NULL event types are dropped up front: ``concat_ws`` skips NULLs,
-    so a NULL inside the window would silently emit a SHORTENED
-    context still labeled as a full ``context_len`` example (and
-    diverge from the oracle, whose ``||`` concatenation nulls out) —
-    malformed rows must not become malformed training examples.
-    """
-    from pyspark.sql import Window
-
-    ev = t["events"].filter(F.col("event_type").isNotNull())
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    lags = [
-        F.lag("event_type", i).over(w) for i in range(context_len, 0, -1)
-    ]
-    return (
-        ev.select(
-            "user_id",
-            "event_id",
-            F.concat_ws(" ", *lags).alias("context"),
-            F.col("event_type").alias("label"),
-            *[lags[0].alias("_oldest")],
-        )
-        .filter(F.col("_oldest").isNotNull())
-        .drop("_oldest")
-        .orderBy("user_id", "event_id")
-    )
-
-
 def shard_for_training(t: dict[str, DataFrame]) -> DataFrame:
     """Deterministic global shuffle + sharding — the last step before
     a corpus becomes training shards. Every document gets a

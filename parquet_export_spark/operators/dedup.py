@@ -33,20 +33,6 @@ from pyspark.sql import functions as F
 # --------------------------------------------------------------------------
 
 
-def dedup_exact(t: dict[str, DataFrame]) -> DataFrame:
-    """One row per distinct document text: content hash, copy count,
-    the keeper (min doc_id). Scale: shuffle on the digest only."""
-    return (
-        t["documents"]
-        .groupBy(F.md5("text").alias("content_hash"))
-        .agg(
-            F.min("doc_id").alias("keeper_doc_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-        .orderBy("content_hash")
-    )
-
-
 def dedup_exact_keep_first(t: dict[str, DataFrame]) -> DataFrame:
     """The deduplicated table itself: keep the min-doc_id row per text.
 
@@ -1603,55 +1589,6 @@ def fuzzy_join_parts(
 
 #: incremental-dedup batch selector — shared with the oracle SQL.
 INCR_BATCH_MOD = 10
-
-
-def dedup_incremental(
-    t: dict[str, DataFrame], batch_mod: int = INCR_BATCH_MOD
-) -> DataFrame:
-    """Incremental exact dedup: a NEW document batch checked against
-    the EXISTING corpus — the nightly shape of a continuously-fed
-    training lake (dedup today's crawl against 100 TB of history
-    without re-deduplicating history).
-
-    The batch is carved deterministically (doc_id % batch_mod == 0 is
-    "today's arrivals", the rest is "the lake") so the DuckDB oracle
-    replays the split. Output: one row per new doc — its content hash,
-    whether it collides with history (and the oldest historical
-    holder), and whether it survives (first copy among new arrivals of
-    a text unseen in history: new-batch-internal dups are also caught,
-    keeper = min doc_id, the same rule as ``dedup_exact``).
-
-    Scale shape: the lake side reduces to (digest -> min doc_id) — a
-    16-byte-key aggregate — before a LEFT join from the (small) batch
-    side; history documents never move, only their digests do. On a
-    digest-bucketed lake layout the join co-locates and only the batch
-    shuffles.
-    """
-    docs = t["documents"].withColumn("content_hash", F.md5("text"))
-    new_b = docs.filter(F.col("doc_id") % batch_mod == 0)
-    lake = docs.filter(F.col("doc_id") % batch_mod != 0)
-    lake_digests = lake.groupBy("content_hash").agg(
-        F.min("doc_id").alias("lake_doc_id")
-    )
-    batch_keeper = new_b.groupBy("content_hash").agg(
-        F.min("doc_id").alias("batch_keeper_id")
-    )
-    return (
-        new_b.select("doc_id", "content_hash")
-        .join(lake_digests, "content_hash", "left")
-        .join(batch_keeper, "content_hash")
-        .select(
-            "doc_id",
-            "content_hash",
-            F.col("lake_doc_id").isNotNull().alias("dup_of_lake"),
-            "lake_doc_id",
-            (
-                F.col("lake_doc_id").isNull()
-                & (F.col("doc_id") == F.col("batch_keeper_id"))
-            ).alias("keep"),
-        )
-        .orderBy("doc_id")
-    )
 
 
 #: signature-estimated Jaccard threshold for the incremental near-dup

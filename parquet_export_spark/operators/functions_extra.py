@@ -1,55 +1,13 @@
-"""Extended scalar and window function coverage (SURVEY.md §2B.5/8).
-
-Rounds out the function families: RANGE window frames, distribution
-ranks, first/last_value frames, edit distance, string splitting and
-padding, calendar arithmetic, least/greatest.
+"""Extended scalar function coverage (SURVEY.md §2B.5/8): edit
+distance, string splitting and padding, calendar arithmetic, VARIANT
+JSON. The RANGE-frame, distribution-rank and least/greatest entries
+are SQL entries in ``parquet_export_spark.queries``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def window_range_frame(t: dict[str, DataFrame]) -> DataFrame:
-    """RANGE frame over a numeric ordering: each order's totalprice
-    plus all orders of the same customer within 5 order-keys back."""
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderkey")
-        .rangeBetween(-5, 0)
-    )
-    return (
-        t["orders"]
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            F.sum(F.col("o_totalprice").cast("decimal(30,4)"))
-            .over(w)
-            .cast("double")
-            .alias("nearby_total"),
-        )
-        .orderBy("o_custkey", "o_orderkey")
-    )
-
-
-def window_distribution_ranks(t: dict[str, DataFrame]) -> DataFrame:
-    """percent_rank / cume_dist / first & last value with explicit
-    frames, per brand."""
-    w = Window.partitionBy("p_brand").orderBy("p_retailprice", "p_partkey")
-    w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return (
-        t["part"]
-        .select(
-            "p_brand",
-            "p_partkey",
-            F.round(F.percent_rank().over(w), 9).alias("pct_rank"),
-            F.round(F.cume_dist().over(w), 9).alias("cume"),
-            F.first("p_partkey").over(w_full).alias("cheapest_key"),
-            F.last("p_partkey").over(w_full).alias("priciest_key"),
-        )
-        .orderBy("p_brand", "p_partkey")
-    )
 
 
 def string_funcs_extra(t: dict[str, DataFrame]) -> DataFrame:
@@ -84,21 +42,6 @@ def date_funcs_extra(t: dict[str, DataFrame]) -> DataFrame:
             ).alias("month_start"),
         )
         .orderBy("o_orderkey")
-    )
-
-
-def conditional_funcs(t: dict[str, DataFrame]) -> DataFrame:
-    """least / greatest / sign / width-bucket-style binning."""
-    return (
-        t["part"]
-        .select(
-            "p_partkey",
-            F.least("p_size", F.lit(25)).alias("size_capped"),
-            F.greatest("p_size", F.lit(10)).alias("size_floored"),
-            F.signum(F.col("p_retailprice") - 500).cast("int").alias("above_500"),
-            F.regexp_extract("p_name", "([a-z]+) ([a-z]+)", 2).alias("noun"),
-        )
-        .orderBy("p_partkey")
     )
 
 

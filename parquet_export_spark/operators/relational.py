@@ -1,10 +1,14 @@
 """Relational query surface over the lake (SURVEY.md §2B).
 
 The reference never issues anything beyond ``SELECT * FROM t``
-(reference main.py:200); this module supplies the downstream query
-surface — filters, projections, joins over the FK graph, aggregations,
-windows, sorts, set ops, scalar functions — as declarative DataFrame
-plans so Catalyst handles pushdown, pruning, join selection and AQE.
+(reference main.py:200); the lake's downstream query surface —
+filters, projections, joins over the FK graph, aggregations, windows,
+sorts, set ops, scalar functions — is declarative, so Catalyst handles
+pushdown, pruning, join selection and AQE. Shapes whose oracle SQL
+runs unchanged on Spark are SQL entries in
+``parquet_export_spark.queries``; this module keeps the DataFrame
+plans that the benchmark runs, that need a DataFrame-only API
+(posexplode, sampling, sketches), or whose SQL differs per engine.
 
 Every function takes the loaded table dict and returns a DataFrame.
 Column aliases match the DuckDB oracle SQL in
@@ -112,149 +116,9 @@ def q5_revenue_by_nation(t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def q6_forecast_revenue(t: dict[str, DataFrame]) -> DataFrame:
-    """TPC-H Q6 shape: pure scan+filter+global agg — pushdown showcase."""
-    li = t["lineitem"]
-    return li.filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
-        & (F.col("l_discount") >= 0.03)
-        & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    ).agg(dsum(F.col("l_extendedprice") * F.col("l_discount"), scale=6).alias("revenue"))
-
-
-def q10_returned_items(t: dict[str, DataFrame]) -> DataFrame:
-    """TPC-H Q10 shape: join fact->dims, agg by customer, top-k."""
-    li = t["lineitem"].filter(F.col("l_returnflag") == "R")
-    orders = t["orders"].filter(
-        (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp_ntz"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
-    )
-    cust, nation = t["customer"], t["nation"]
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), scale=6).alias("revenue"))
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-    )
-
-
 # --------------------------------------------------------------------------
-# Basic blocks: filter/project, joins, set ops, sort/limit
+# Basic blocks: explode, sampling
 # --------------------------------------------------------------------------
-
-
-def filter_project(t: dict[str, DataFrame]) -> DataFrame:
-    """Filter + projection; both reach the parquet scan."""
-    return (
-        t["lineitem"]
-        .filter((F.col("l_quantity") > 45) & (F.col("l_discount") > 0.05))
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_discount")
-        .orderBy("l_orderkey", "l_linenumber")
-    )
-
-
-def join_inner(t: dict[str, DataFrame]) -> DataFrame:
-    """Plain equi inner join over the orders->customer FK edge."""
-    o, c = t["orders"], t["customer"]
-    return (
-        o.join(c, o.o_custkey == c.c_custkey, "inner")
-        .select("o_orderkey", "c_name", "o_totalprice")
-        .orderBy("o_orderkey")
-    )
-
-
-def join_left_nulls(t: dict[str, DataFrame]) -> DataFrame:
-    """Left outer join keeping unmatched customers (null order side)."""
-    o = t["orders"].filter(F.col("o_totalprice") > 400_000)
-    c = t["customer"]
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .select("c_custkey", "o_orderkey", "o_totalprice")
-        .orderBy("c_custkey", F.asc_nulls_first("o_orderkey"))
-    )
-
-
-def join_semi(t: dict[str, DataFrame]) -> DataFrame:
-    """Customers with at least one urgent order (left semi)."""
-    urgent = t["orders"].filter(F.col("o_orderpriority") == "1-URGENT")
-    c = t["customer"]
-    return (
-        c.join(urgent, c.c_custkey == urgent.o_custkey, "left_semi")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-    )
-
-
-def join_anti(t: dict[str, DataFrame]) -> DataFrame:
-    """Customers with no urgent order (left anti on a filtered side)."""
-    c = t["customer"]
-    o = t["orders"].filter(F.col("o_orderpriority") == "1-URGENT")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-    )
-
-
-def join_range(t: dict[str, DataFrame]) -> DataFrame:
-    """Non-equi (range/theta) join: parts priced within a size-dependent band.
-
-    Scale note: a pure theta join is a cartesian product; here the
-    equality on p_size keeps it an equi-join with a residual range
-    predicate — the pattern to prefer at 100 TB.
-    """
-    p = t["part"]
-    s = t["supplier"]
-    # supplier scales with SF — no forced broadcast; the mod-10 key
-    # keeps the join an equi-join either way and AQE broadcasts the
-    # supplier side only while it fits.
-    return (
-        p.join(
-            s,
-            (p.p_size % 10 == s.s_suppkey % 10) & (p.p_retailprice > s.s_acctbal / 4),
-            "inner",
-        )
-        .select("p_partkey", "s_suppkey", "p_retailprice", "s_acctbal")
-        .orderBy("p_partkey", "s_suppkey")
-    )
-
-
-def set_ops(t: dict[str, DataFrame]) -> DataFrame:
-    """UNION / INTERSECT / EXCEPT over customer-key sets."""
-    building = (
-        t["customer"].filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    )
-    with_urgent = (
-        t["orders"].filter(F.col("o_orderpriority") == "1-URGENT").select(
-            F.col("o_custkey").alias("c_custkey")
-        )
-    )
-    u = building.union(with_urgent).distinct().withColumn("set_op", F.lit("union"))
-    i = building.intersect(with_urgent).withColumn("set_op", F.lit("intersect"))
-    e = building.subtract(with_urgent).withColumn("set_op", F.lit("except"))
-    return u.union(i).union(e).orderBy("set_op", "c_custkey")
-
-
-def set_ops_all(t: dict[str, DataFrame]) -> DataFrame:
-    """Multiset variants: UNION ALL / INTERSECT ALL / EXCEPT ALL over
-    duplicate-bearing projections (bag semantics preserved)."""
-    flags_r = t["lineitem"].filter(F.col("l_returnflag") == "R").select("l_orderkey")
-    flags_n = t["lineitem"].filter(F.col("l_returnflag") == "N").select("l_orderkey")
-    u = flags_r.unionAll(flags_n).withColumn("set_op", F.lit("union_all"))
-    i = flags_r.intersectAll(flags_n).withColumn("set_op", F.lit("intersect_all"))
-    e = flags_r.exceptAll(flags_n).withColumn("set_op", F.lit("except_all"))
-    return (
-        u.union(i)
-        .union(e)
-        .groupBy("set_op")
-        .agg(F.count(F.lit(1)).alias("n_rows"), F.countDistinct("l_orderkey").alias("n_keys"))
-        .orderBy("set_op")
-    )
 
 
 def lateral_explode_items(t: dict[str, DataFrame]) -> DataFrame:
@@ -371,34 +235,9 @@ def sample_fraction_checked_oracle_sql(fraction: float = 0.1) -> str:
         """
 
 
-def sort_limit_offset(t: dict[str, DataFrame]) -> DataFrame:
-    """Deterministic pagination: total order + offset + limit."""
-    return (
-        t["orders"]
-        .select("o_orderkey", "o_totalprice")
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .offset(10)
-        .limit(25)
-    )
-
-
 # --------------------------------------------------------------------------
 # Aggregation variants
 # --------------------------------------------------------------------------
-
-
-def agg_distinct(t: dict[str, DataFrame]) -> DataFrame:
-    """COUNT(DISTINCT) + plain aggregates per group."""
-    return (
-        maybe_fanout(t["orders"])
-        .groupBy("o_orderstatus")
-        .agg(
-            F.countDistinct("o_custkey").alias("n_customers"),
-            F.count(F.lit(1)).alias("n_orders"),
-            dsum("o_totalprice").alias("total_price"),
-        )
-        .orderBy("o_orderstatus")
-    )
 
 
 def agg_rollup(t: dict[str, DataFrame]) -> DataFrame:
@@ -426,23 +265,6 @@ def agg_cube(t: dict[str, DataFrame]) -> DataFrame:
             F.grouping_id().cast("int").alias("gid"),
         )
         .orderBy("gid", "l_returnflag", "l_linestatus")
-    )
-
-
-def agg_stats(t: dict[str, DataFrame]) -> DataFrame:
-    """Min/max/count + conditional aggregation (CASE WHEN inside agg)."""
-    return (
-        maybe_fanout(t["lineitem"])
-        .groupBy("l_returnflag")
-        .agg(
-            F.min("l_quantity").alias("min_qty"),
-            F.max("l_quantity").alias("max_qty"),
-            F.count(F.when(F.col("l_discount") > 0.05, 1)).alias("n_discounted"),
-            dsum(F.when(F.col("l_tax") > 0.04, F.col("l_extendedprice")).otherwise(0.0)).alias(
-                "taxed_price"
-            ),
-        )
-        .orderBy("l_returnflag")
     )
 
 
@@ -533,24 +355,6 @@ def window_topk_per_group(t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def window_running_sum(t: dict[str, DataFrame]) -> DataFrame:
-    """Running per-customer revenue ordered by date (unbounded-preceding frame)."""
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        t["orders"]
-        .withColumn(
-            "running_total",
-            F.sum(F.col("o_totalprice").cast("decimal(30,4)")).over(w).cast("double"),
-        )
-        .select("o_custkey", "o_orderkey", "o_orderdate", "running_total")
-        .orderBy("o_custkey", "o_orderdate", "o_orderkey")
-    )
-
-
 def window_lag_lead(t: dict[str, DataFrame]) -> DataFrame:
     """Per-user inter-event gap via lag() over event time."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -563,23 +367,6 @@ def window_lag_lead(t: dict[str, DataFrame]) -> DataFrame:
         )
         .select("user_id", "event_id", "ts", "gap_seconds")
         .orderBy("user_id", "ts", "event_id")
-    )
-
-
-def window_rank_dense(t: dict[str, DataFrame]) -> DataFrame:
-    """rank / dense_rank / ntile over part prices within brand."""
-    w = Window.partitionBy("p_brand").orderBy(F.desc("p_retailprice"), "p_partkey")
-    return (
-        t["part"]
-        .select(
-            "p_brand",
-            "p_partkey",
-            "p_retailprice",
-            F.rank().over(w).alias("price_rank"),
-            F.dense_rank().over(w).alias("price_dense_rank"),
-            F.ntile(4).over(w).alias("price_quartile"),
-        )
-        .orderBy("p_brand", "price_rank", "p_partkey")
     )
 
 
@@ -627,25 +414,6 @@ def scalar_date_funcs(t: dict[str, DataFrame]) -> DataFrame:
             ),
         )
         .orderBy("o_orderkey")
-    )
-
-
-def scalar_math_funcs(t: dict[str, DataFrame]) -> DataFrame:
-    """Math family: round/floor/ceil/abs/pmod/sqrt."""
-    return (
-        t["part"]
-        .select(
-            "p_partkey",
-            # *2 is exact in binary, so round() sees the same distance-
-            # from-grid value in every engine (no half-way hazards).
-            F.round(F.col("p_retailprice") * 2, 2).alias("inflated"),
-            F.floor("p_retailprice").cast("long").alias("price_floor"),
-            F.ceil("p_retailprice").cast("long").alias("price_ceil"),
-            F.abs(F.col("p_size") - 25).alias("size_dev"),
-            F.pmod(F.col("p_partkey"), F.lit(7)).alias("key_mod"),
-            F.round(F.sqrt("p_retailprice"), 6).alias("price_sqrt"),
-        )
-        .orderBy("p_partkey")
     )
 
 

@@ -24,50 +24,6 @@ def _dsum2(col, scale: int = 8):
     return F.sum(col.cast(f"decimal(38,{scale})")).cast("double")
 
 
-def stats_moments(t: dict[str, DataFrame]) -> DataFrame:
-    """Mean / stddev (sample) / variance per group from exact decimal
-    moment sums — reproducible at any parallelism."""
-    li = maybe_fanout(t["lineitem"])
-    x = F.col("l_quantity")
-    n = F.count(F.lit(1)).cast("double")
-    sx = _dsum2(x)
-    sxx = _dsum2(x * x)
-    mean = sx / n
-    # sample variance: (Σx² - (Σx)²/n) / (n-1) — all double ops on
-    # exact inputs, so both engines produce identical bits.
-    var = (sxx - sx * sx / n) / (n - F.lit(1.0))
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.round(mean, 9).alias("mean_qty"),
-            F.round(var, 9).alias("var_qty"),
-            F.round(F.sqrt(var), 9).alias("stddev_qty"),
-            n.cast("long").alias("n_items"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-def stats_correlation(t: dict[str, DataFrame]) -> DataFrame:
-    """Pearson correlation of price vs quantity per status, from
-    explicit decimal moments."""
-    li = maybe_fanout(t["lineitem"])
-    x, y = F.col("l_quantity"), F.col("l_extendedprice")
-    n = F.count(F.lit(1)).cast("double")
-    sx, sy = _dsum2(x), _dsum2(y)
-    sxx, syy = _dsum2(x * x), _dsum2(y * y, scale=4)
-    sxy = _dsum2(x * y, scale=4)
-    corr = (n * sxy - sx * sy) / (
-        F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy)
-    )
-    return (
-        li
-        .groupBy("l_linestatus")
-        .agg(F.round(corr, 9).alias("corr_qty_price"))
-        .orderBy("l_linestatus")
-    )
-
-
 def percentiles_exact(t: dict[str, DataFrame]) -> DataFrame:
     """Exact interpolated percentiles (median, p90) per group."""
     li = maybe_fanout(t["lineitem"])
@@ -131,17 +87,6 @@ def merge_upsert_orders(t: dict[str, DataFrame]) -> DataFrame:
         merge_upsert(orders, changes, "o_orderkey", updated_col=None)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .orderBy("o_orderkey")
-    )
-
-
-def histogram_bins(t: dict[str, DataFrame]) -> DataFrame:
-    """Fixed-width histogram of order totals (width_bucket staple)."""
-    o = t["orders"]
-    bin_expr = F.floor(F.col("o_totalprice") / 50_000).cast("int")
-    return (
-        o.groupBy(bin_expr.alias("price_bin"))
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy("price_bin")
     )
 
 
@@ -491,9 +436,9 @@ def value_outliers(
 
 
 def _next_orders_snapshot(o: DataFrame) -> DataFrame:
-    """The deterministically-derived "next" lake snapshot shared by
-    ``snapshot_diff_orders`` (diff derivation) and
-    ``apply_changefeed_orders`` (feed application): keys % 97 re-priced
+    """The deterministically-derived "next" lake snapshot that
+    ``changefeed_orders`` diffs against and ``apply_changefeed_orders``
+    must reproduce: keys % 97 re-priced
     (+1, exact decimal), % 89 dropped, % 101 re-inserted under a
     shifted key — derivable bit-for-bit by the DuckDB oracle."""
     bumped = (
@@ -512,63 +457,6 @@ def _next_orders_snapshot(o: DataFrame) -> DataFrame:
                 "o_orderkey", F.col("o_orderkey") + F.lit(100_000_000)
             )
         )
-    )
-
-
-def snapshot_diff_orders(t: dict[str, DataFrame]) -> DataFrame:
-    """CDC-style diff of two lake snapshots: which keys were inserted,
-    deleted, or updated between exports.
-
-    The reference republishes full snapshots every run (reference
-    README.md:5), leaving consumers no way to see what changed; this is
-    the change-feed derivation an incremental consumer runs instead of
-    re-reading 100 TB. The "next" snapshot is derived deterministically
-    from orders so the oracle can mirror it bit-for-bit: keys % 97 == 0
-    are re-priced (+1, exact decimal), keys % 89 == 0 are dropped, and
-    keys % 101 == 0 re-enter with a shifted key (synthetic inserts).
-
-    Shape: presence flags + one full-outer sort-merge join on the key
-    (a single shuffle per side), then a row-compare with
-    null-safe-equality — never a hash of the whole row collected to the
-    driver. Unchanged rows (the overwhelming majority at scale) are
-    filtered before the sort, so the output is proportional to the
-    churn, not the table.
-    """
-    o = t["orders"]
-    new_snap = _next_orders_snapshot(o)
-    old_s = o.select(
-        F.col("o_orderkey").alias("key"),
-        F.col("o_totalprice").alias("old_totalprice"),
-        F.col("o_orderstatus").alias("old_status"),
-        F.lit(1).alias("in_old"),
-    )
-    new_s = new_snap.select(
-        F.col("o_orderkey").alias("key"),
-        F.col("o_totalprice").alias("new_totalprice"),
-        F.col("o_orderstatus").alias("new_status"),
-        F.lit(1).alias("in_new"),
-    )
-    joined = old_s.join(new_s, "key", "full_outer")
-    change_type = (
-        F.when(F.col("in_old").isNull(), F.lit("insert"))
-        .when(F.col("in_new").isNull(), F.lit("delete"))
-        .otherwise(F.lit("update"))
-    )
-    changed = (
-        F.col("in_old").isNull()
-        | F.col("in_new").isNull()
-        | ~F.col("old_totalprice").eqNullSafe(F.col("new_totalprice"))
-        | ~F.col("old_status").eqNullSafe(F.col("new_status"))
-    )
-    return (
-        joined.filter(changed)
-        .select(
-            F.col("key").alias("o_orderkey"),
-            change_type.alias("change_type"),
-            "old_totalprice",
-            "new_totalprice",
-        )
-        .orderBy("o_orderkey", "change_type")
     )
 
 
@@ -737,7 +625,7 @@ def apply_changefeed_orders(t: dict[str, DataFrame]) -> DataFrame:
     """CDC APPLY: merge a change feed (insert/update/delete row images)
     into the previous snapshot and prove the result IS the next
     snapshot — the ingestion half of the change-data-capture contract
-    (``snapshot_diff_orders`` derives feeds; this consumes them; the
+    (``changefeed_orders`` derives feeds; this consumes them; the
     reference can only republish full snapshots, reference README.md:5).
 
     Scale shape: ONE full-outer hash join keyed by the primary key —
@@ -907,82 +795,6 @@ def validate_lake_constraints(
     for c in checks[1:]:
         out = out.unionByName(c)
     return out.orderBy("constraint_name")
-
-
-def ols_value_by_hour(t: dict[str, DataFrame]) -> DataFrame:
-    """Closed-form OLS regression IN the engine: per event_type, fit
-    value ~ hour-of-day — the in-warehouse ML-feature step (trend
-    slopes per segment) that avoids exporting 100 TB to a stats
-    library.
-
-    Same exactness discipline as ``stats_moments``: the five sufficient
-    statistics (n, Σx, Σx², Σy, Σxy) accumulate as integers / exact
-    decimals (order-independent, partial+final map-side combine — ONE
-    aggregate shuffle total), and slope/intercept/R-relevant terms
-    derive in closed-form IEEE double arithmetic on those exact inputs,
-    so both engines produce identical bits -> full DuckDB oracle. At
-    100 TB: a 24-distinct-value regressor against a group-sized output;
-    nothing but the grouped aggregate touches the data.
-    """
-    e = maybe_fanout(t["events"])
-    x = F.hour("ts").cast("long")
-    ydec = F.col("value").cast("decimal(30,6)")
-    n = F.count(F.lit(1)).cast("double")
-    sx = F.sum(x).cast("double")
-    sxx = F.sum(x * x).cast("double")
-    sy = F.sum(ydec).cast("double")
-    sxy = F.sum(x.cast("decimal(10,0)") * ydec).cast("double")
-    # a degenerate regressor (all events in one hour, or a single
-    # event) has no slope: denominator 0 -> NULL, never NaN/Inf
-    # (nullif mirrors the oracle exactly; IEEE 0-division would
-    # produce engine-presentation-dependent NaN rendering).
-    denom = F.nullif(n * sxx - sx * sx, F.lit(0.0))
-    slope = (n * sxy - sx * sy) / denom
-    intercept = (sy - slope * sx) / n
-    return (
-        e.groupBy("event_type")
-        .agg(
-            F.round(slope, 9).alias("slope_per_hour"),
-            F.round(intercept, 9).alias("intercept"),
-            n.cast("long").alias("n_events"),
-        )
-        .orderBy("event_type")
-    )
-
-
-def histogram_equidepth(t: dict[str, DataFrame], n_buckets: int = 20) -> DataFrame:
-    """Equi-depth (quantile) histogram of order totals — the
-    selectivity-estimation twin of :func:`histogram_bins`' fixed-width
-    binning: every bucket holds ~the same row count and the bucket
-    BOUNDARIES carry the information (what an optimizer's column
-    statistics store).
-
-    ``ntile`` over a TOTAL order (o_totalprice, then o_orderkey as the
-    deterministic tie-break — equal prices would otherwise split
-    between buckets engine-dependently) assigns buckets identically on
-    both engines; one aggregate then emits count + [lo, hi] per
-    bucket. Scale note: an unpartitioned ntile is a single-reducer
-    sort — this exact formulation is the ORACLE-CHECKABLE baseline; at
-    100 TB the production variant derives boundaries from
-    ``approx_percentile`` (bounded-memory sketch, see
-    ``approx_percentiles``) and assigns buckets map-side by range
-    comparison against the broadcast boundary array.
-    """
-    from pyspark.sql import Window
-
-    o = t["orders"]
-    w = Window.orderBy("o_totalprice", "o_orderkey")
-    return (
-        o.select("o_orderkey", "o_totalprice")
-        .withColumn("bucket", F.ntile(n_buckets).over(w))
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.min("o_totalprice").alias("lo"),
-            F.max("o_totalprice").alias("hi"),
-        )
-        .orderBy("bucket")
-    )
 
 
 def histogram_equidepth_approx(
@@ -1777,64 +1589,6 @@ def anomaly_suite_oracle_sql() -> str:
         LEFT JOIN zc ON zc.event_type = cu.event_type
         LEFT JOIN mc ON mc.event_type = cu.event_type
         ORDER BY cu.event_type
-        """
-
-
-def target_encode_loo(t: dict[str, DataFrame]) -> DataFrame:
-    """Leave-one-out target encoding of event_type against value — the
-    categorical-feature encoder that avoids self-leakage: each row's
-    encoding is the mean of its category's target EXCLUDING the row
-    itself, ``(S_g - v) / (n_g - 1)`` (plain category means leak the
-    row's own label into its feature; LOO is the standard fix short of
-    k-fold encoding).
-
-    Exactness: per-category sums accumulate in exact decimal
-    (order-independent, map-side combinable — the stats_moments
-    recipe), broadcast back onto the fact scan, and the per-row
-    arithmetic is one identical IEEE subtract/divide on both engines.
-    Singleton categories have no leave-one-out mean (0/0) — NULL, not
-    NaN, mirrored by the oracle's NULLIF.
-
-    Plan: one bounded aggregate + one broadcast join + map-side
-    arithmetic; the fact table is scanned once and never shuffled.
-    """
-    e = t["events"]
-    g = e.groupBy("event_type").agg(
-        F.sum(F.col("value").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("s"),
-        F.count(F.lit(1)).cast("double").alias("n"),
-    )
-    loo = F.when(
-        F.col("n") > 1,
-        (F.col("s") - F.col("value")) / (F.col("n") - F.lit(1.0)),
-    )
-    return (
-        e.select("event_id", "event_type", "value")
-        .join(F.broadcast(g), "event_type")
-        .select(
-            "event_id",
-            "event_type",
-            "value",
-            F.round(loo, 9).alias("loo_mean"),
-        )
-        .orderBy("event_id")
-    )
-
-
-def target_encode_loo_oracle_sql() -> str:
-    return """
-        WITH g AS (
-          SELECT event_type,
-                 CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS s,
-                 CAST(COUNT(*) AS DOUBLE) AS n
-          FROM events GROUP BY event_type)
-        SELECT event_id, e.event_type, value,
-               ROUND(CASE WHEN n > 1
-                          THEN (s - value) / (n - 1.0) END, 9)
-                   AS loo_mean
-        FROM events e JOIN g ON g.event_type = e.event_type
-        ORDER BY event_id
         """
 
 
@@ -3307,76 +3061,6 @@ def tv_distance_oracle_sql() -> str:
         """
 
 
-def hhi_concentration_by_segment(t: dict[str, DataFrame]) -> DataFrame:
-    """Herfindahl-Hirschman revenue concentration per market segment:
-    HHI = Σ_customers (customer's revenue share)² — the antitrust
-    /portfolio-risk standard (1/n for perfectly even books, 1.0 for a
-    single-customer segment). The one-scalar answer to "how dependent
-    is this segment on its top accounts", complementing
-    value_gini_by_type's inequality view with a concentration view.
-
-    Exactness: per-customer cents squared leaves int64 at lake scale
-    (a 1e9-cent lifetime squared is 1e18, and segments sum millions
-    of customers), so the quadratic sum accumulates in EXACT DECIMAL
-    (operands cast decimal(19,0) -> products decimal(38,0), the
-    assortativity recipe), then HHI = Σc² / (Σc)² folds to ONE IEEE
-    expression, ROUND(.., 9).
-
-    Plan: one orders scan collapsed to customer grain, one broadcast
-    customer-dim join for the segment, two segment-sized aggregates.
-
-    Output: (segment, n_customers, total_cents, hhi).
-    """
-    o = t["orders"].select(
-        "o_custkey",
-        F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)").alias(
-            "cents"
-        ),
-    )
-    per = o.groupBy("o_custkey").agg(
-        F.sum("cents").cast("long").alias("c")
-    )
-    seg = t["customer"].select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.col("c_mktsegment").alias("segment"),
-    )
-    sq = F.sum(
-        F.col("c").cast("decimal(19,0)") * F.col("c").cast("decimal(19,0)")
-    ).cast("double")
-    tot = F.sum(F.col("c").cast("decimal(19,0)")).cast("double")
-    return (
-        per.join(seg, "o_custkey")
-        .groupBy("segment")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_customers"),
-            F.sum("c").cast("long").alias("total_cents"),
-            F.round(sq / (tot * tot), 9).alias("hhi"),
-        )
-        .orderBy("segment")
-    )
-
-
-def hhi_concentration_oracle_sql() -> str:
-    return """
-        WITH per AS (
-          SELECT o_custkey,
-                 CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5)
-                               AS BIGINT)) AS BIGINT) AS c
-          FROM orders GROUP BY o_custkey)
-        SELECT cu.c_mktsegment AS segment,
-               CAST(COUNT(*) AS BIGINT) AS n_customers,
-               CAST(SUM(p.c) AS BIGINT) AS total_cents,
-               ROUND(CAST(SUM(CAST(p.c AS DECIMAL(19,0))
-                               * CAST(p.c AS DECIMAL(19,0))) AS DOUBLE)
-                     / (CAST(SUM(CAST(p.c AS DECIMAL(19,0))) AS DOUBLE)
-                        * CAST(SUM(CAST(p.c AS DECIMAL(19,0)))
-                               AS DOUBLE)), 9) AS hhi
-        FROM per p JOIN customer cu ON cu.c_custkey = p.o_custkey
-        GROUP BY cu.c_mktsegment
-        ORDER BY segment
-        """
-
-
 def value_migration_matrix(t: dict[str, DataFrame]) -> DataFrame:
     """Customer value-migration matrix: each customer's MONETARY
     QUINTILE in the first half of the order history vs the second
@@ -3537,99 +3221,6 @@ def value_migration_oracle_sql() -> str:
         WHERE q_early IS NOT NULL AND q_late IS NOT NULL
         GROUP BY q_early, q_late
         ORDER BY q_early, q_late
-        """
-
-
-def stats_higher_moments(t: dict[str, DataFrame]) -> DataFrame:
-    """Skewness and excess kurtosis of quantity per return flag —
-    completing the moment family (stats_moments stops at variance):
-    the tail-shape diagnostics a distribution monitor alarms on when
-    mean and variance look unchanged.
-
-    Exactness: skew and kurtosis are SCALE-INVARIANT, so the inputs
-    quantize losslessly to integer hundredths (q = quantity*100, <=
-    5000 here) and the per-row powers q², q³, q⁴ stay int64 (<=
-    6.25e14); only the SUMS leave int64 at lake scale, so they
-    accumulate in exact decimal(38,0) (the assortativity recipe).
-    The standardized central moments then fold in IEEE doubles with
-    the SAME association on both engines (the stats_correlation
-    recipe), ROUND(.., 9). Zero-variance groups yield NULL.
-
-    Output: (l_returnflag, n_items, skewness, kurtosis_excess).
-    """
-    li = maybe_fanout(t["lineitem"])
-    q = F.expr("CAST(l_quantity * 100 AS BIGINT)")
-    q2 = F.expr("CAST(l_quantity * 100 AS BIGINT)"
-                " * CAST(l_quantity * 100 AS BIGINT)")
-    n = F.count(F.lit(1)).cast("double")
-    s1 = F.sum(q.cast("decimal(38,0)")).cast("double")
-    s2 = F.sum(q2.cast("decimal(38,0)")).cast("double")
-    s3 = F.sum(
-        (q2 * q).cast("decimal(38,0)")
-    ).cast("double")
-    s4 = F.sum(
-        (q2 * q2).cast("decimal(38,0)")
-    ).cast("double")
-    mu = s1 / n
-    m2 = s2 / n - mu * mu
-    m3 = s3 / n - F.lit(3.0) * mu * (s2 / n) + F.lit(2.0) * mu * mu * mu
-    m4 = (
-        s4 / n
-        - F.lit(4.0) * mu * (s3 / n)
-        + F.lit(6.0) * mu * mu * (s2 / n)
-        - F.lit(3.0) * mu * mu * mu * mu
-    )
-    skew = F.when(m2 > 0, m3 / (m2 * F.sqrt(m2)))
-    kurt = F.when(m2 > 0, m4 / (m2 * m2) - F.lit(3.0))
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_items"),
-            F.round(skew, 9).alias("skewness"),
-            F.round(kurt, 9).alias("kurtosis_excess"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-def stats_higher_moments_oracle_sql() -> str:
-    """DuckDB replay: same integer powers, decimal sums, and the
-    byte-identical IEEE moment expressions."""
-    return """
-        SELECT l_returnflag, CAST(n AS BIGINT) AS n_items,
-               ROUND(CASE WHEN (s2 / n - (s1 / n) * (s1 / n)) > 0
-                     THEN (s3 / n - 3.0 * (s1 / n) * (s2 / n)
-                           + 2.0 * (s1 / n) * (s1 / n) * (s1 / n))
-                          / ((s2 / n - (s1 / n) * (s1 / n))
-                             * SQRT(s2 / n - (s1 / n) * (s1 / n)))
-                     END, 9) AS skewness,
-               ROUND(CASE WHEN (s2 / n - (s1 / n) * (s1 / n)) > 0
-                     THEN (s4 / n - 4.0 * (s1 / n) * (s3 / n)
-                           + 6.0 * (s1 / n) * (s1 / n) * (s2 / n)
-                           - 3.0 * (s1 / n) * (s1 / n) * (s1 / n)
-                             * (s1 / n))
-                          / ((s2 / n - (s1 / n) * (s1 / n))
-                             * (s2 / n - (s1 / n) * (s1 / n))) - 3.0
-                     END, 9) AS kurtosis_excess
-        FROM (
-          SELECT l_returnflag,
-                 CAST(COUNT(*) AS DOUBLE) AS n,
-                 CAST(SUM(CAST(CAST(l_quantity * 100 AS BIGINT)
-                               AS DECIMAL(38,0))) AS DOUBLE) AS s1,
-                 CAST(SUM(CAST(CAST(l_quantity * 100 AS BIGINT)
-                               * CAST(l_quantity * 100 AS BIGINT)
-                               AS DECIMAL(38,0))) AS DOUBLE) AS s2,
-                 CAST(SUM(CAST(CAST(l_quantity * 100 AS BIGINT)
-                               * CAST(l_quantity * 100 AS BIGINT)
-                               * CAST(l_quantity * 100 AS BIGINT)
-                               AS DECIMAL(38,0))) AS DOUBLE) AS s3,
-                 CAST(SUM(CAST(CAST(l_quantity * 100 AS BIGINT)
-                               * CAST(l_quantity * 100 AS BIGINT)
-                               * (CAST(l_quantity * 100 AS BIGINT)
-                                  * CAST(l_quantity * 100 AS BIGINT))
-                               AS DECIMAL(38,0))) AS DOUBLE) AS s4
-          FROM lineitem GROUP BY l_returnflag)
-        ORDER BY l_returnflag
         """
 
 
@@ -5611,100 +5202,6 @@ def changepoint_scan_daily_oracle_sql() -> str:
         """
 
 
-def weighted_median_price_by_segment(t: dict[str, DataFrame]) -> DataFrame:
-    """Quantity-weighted median of line-item price per market segment
-    — the robust 'typical traded price' a pricing dashboard wants
-    (the unweighted member is ``percentiles_exact``; weighting by
-    quantity makes a 1000-unit line count 1000x a 1-unit line without
-    exploding rows).
-
-    Definition (deterministic, both engines): values are exact cents,
-    weights exact integer units; the LOWER weighted median is the
-    smallest value v with 2 * cumweight(<= v) >= W. Equal values
-    merge in the collapse, so no tie-break is ever needed beyond the
-    value order itself.
-
-    Scale shape: ONE SF-proportional collapse to (segment, cents,
-    weight) — at most |distinct prices| rows per segment afterwards —
-    then a cumulative window per segment. The per-segment sort is the
-    information-theoretic floor for an exact weighted median; the
-    100 TB relaxation is the same two-gear story as
-    percentiles_exact vs approx_percentiles (a weighted GK sketch),
-    deliberately not duplicated here.
-    """
-    from pyspark.sql import Window
-
-    c = t["customer"].select(
-        F.col("c_custkey").alias("ck"), "c_mktsegment"
-    )
-    o = t["orders"].select(
-        F.col("o_orderkey").alias("ok"), F.col("o_custkey").alias("ck")
-    )
-    li = t["lineitem"].select(
-        F.col("l_orderkey").alias("ok"),
-        F.expr(
-            "CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)"
-        ).alias("cents"),
-        F.expr("CAST(FLOOR(l_quantity + 0.5) AS BIGINT)").alias("w"),
-    )
-    g = (
-        li.join(o, "ok")
-        .join(c, "ck")
-        .groupBy("c_mktsegment", "cents")
-        .agg(F.sum("w").alias("w"))
-    )
-    ws = Window.partitionBy("c_mktsegment").orderBy("cents").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wa = Window.partitionBy("c_mktsegment")
-    win = Window.partitionBy("c_mktsegment").orderBy("cents")
-    return (
-        g.withColumn("cum", F.sum("w").over(ws))
-        .withColumn("tot", F.sum("w").over(wa))
-        .filter(2 * F.col("cum") >= F.col("tot"))
-        .withColumn("rn", F.row_number().over(win))
-        .filter(F.col("rn") == 1)
-        .select(
-            "c_mktsegment",
-            F.col("tot").alias("total_weight"),
-            F.col("cents").alias("weighted_median_cents"),
-        )
-        .orderBy("c_mktsegment")
-    )
-
-
-def weighted_median_price_by_segment_oracle_sql() -> str:
-    return """
-        WITH li AS (
-          SELECT c.c_mktsegment,
-                 CAST(FLOOR(l.l_extendedprice * 100 + 0.5) AS BIGINT)
-                     AS cents,
-                 CAST(FLOOR(l.l_quantity + 0.5) AS BIGINT) AS w
-          FROM lineitem l
-          JOIN orders o ON l.l_orderkey = o.o_orderkey
-          JOIN customer c ON o.o_custkey = c.c_custkey),
-        g AS (
-          SELECT c_mktsegment, cents, SUM(w) AS w
-          FROM li GROUP BY 1, 2),
-        cum AS (
-          SELECT c_mktsegment, cents,
-                 SUM(w) OVER (PARTITION BY c_mktsegment ORDER BY cents
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                                       AND CURRENT ROW) AS cum,
-                 SUM(w) OVER (PARTITION BY c_mktsegment) AS tot
-          FROM g),
-        hit AS (
-          SELECT c_mktsegment, cents, tot,
-                 ROW_NUMBER() OVER (PARTITION BY c_mktsegment
-                                    ORDER BY cents) AS rn
-          FROM cum WHERE 2 * cum >= tot)
-        SELECT c_mktsegment,
-               CAST(tot AS BIGINT) AS total_weight,
-               cents AS weighted_median_cents
-        FROM hit WHERE rn = 1 ORDER BY c_mktsegment
-        """
-
-
 def wow_mix_rate_decomposition(t: dict[str, DataFrame]) -> DataFrame:
     """Week-over-week revenue-change DECOMPOSITION per event type —
     the analyst question behind every 'revenue moved, why?' thread:
@@ -5809,106 +5306,6 @@ def wow_mix_rate_decomposition_oracle_sql() -> str:
                    AS interaction_effect
         FROM j WHERE prev_week = week - 1
         ORDER BY event_type, week
-        """
-
-
-def share_of_parent_rollup(t: dict[str, DataFrame]) -> DataFrame:
-    """Share-of-parent at every level of the geography hierarchy —
-    the drill-down readout a revenue dashboard renders next to a
-    ROLLUP: each nation's revenue as a share of its region AND of the
-    grand total (grouping_sets_revenue gives the LEVEL subtotals;
-    this gives the RATIOS between adjacent levels, which is what the
-    reader actually wants).
-
-    Exact lanes: revenue is summed in int64 cents per nation (one
-    fact-side aggregate); region and grand totals come from windows
-    over the ~25-row nation frame, so the hierarchy math is free.
-    Shares are int64 -> double divisions of exact operands — IEEE
-    deterministic in both engines (the wow_mix_rate_decomposition
-    precision contract) — presented at ROUND 9.
-    """
-    from pyspark.sql import Window
-
-    c = t["customer"].select(
-        F.col("c_custkey").alias("ck"), F.col("c_nationkey").alias("nk")
-    )
-    o = t["orders"].select(
-        F.col("o_custkey").alias("ck"),
-        F.expr("CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)").alias(
-            "cents"
-        ),
-    )
-    n = t["nation"].select(
-        F.col("n_nationkey").alias("nk"),
-        F.col("n_name").alias("nation"),
-        F.col("n_regionkey").alias("rk"),
-    )
-    r = t["region"].select(
-        F.col("r_regionkey").alias("rk"), F.col("r_name").alias("region")
-    )
-    nat = (
-        o.join(c, "ck")
-        .groupBy("nk")
-        .agg(F.sum("cents").alias("nation_cents"))
-        .join(n, "nk")
-        .join(r, "rk")
-    )
-    w_reg = Window.partitionBy("region")
-    w_all = Window.partitionBy()
-    return (
-        nat.withColumn("region_cents", F.sum("nation_cents").over(w_reg))
-        .withColumn("total_cents", F.sum("nation_cents").over(w_all))
-        .select(
-            "region",
-            "nation",
-            "nation_cents",
-            "region_cents",
-            "total_cents",
-            F.round(
-                F.col("nation_cents").cast("double")
-                / F.col("region_cents"),
-                9,
-            ).alias("share_of_region"),
-            F.round(
-                F.col("nation_cents").cast("double") / F.col("total_cents"),
-                9,
-            ).alias("share_of_total"),
-            F.round(
-                F.col("region_cents").cast("double") / F.col("total_cents"),
-                9,
-            ).alias("region_share_of_total"),
-        )
-        .orderBy("region", "nation")
-    )
-
-
-def share_of_parent_rollup_oracle_sql() -> str:
-    return """
-        WITH nat AS (
-          SELECT n.n_regionkey AS rk, n.n_name AS nation,
-                 SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT))
-                     AS nation_cents
-          FROM orders o
-          JOIN customer c ON o.o_custkey = c.c_custkey
-          JOIN nation n ON c.c_nationkey = n.n_nationkey
-          GROUP BY 1, 2),
-        j AS (
-          SELECT r.r_name AS region, nat.nation,
-                 CAST(nat.nation_cents AS BIGINT) AS nation_cents,
-                 CAST(SUM(nat.nation_cents)
-                      OVER (PARTITION BY r.r_name) AS BIGINT)
-                     AS region_cents,
-                 CAST(SUM(nat.nation_cents) OVER () AS BIGINT)
-                     AS total_cents
-          FROM nat JOIN region r ON nat.rk = r.r_regionkey)
-        SELECT region, nation, nation_cents, region_cents, total_cents,
-               ROUND(CAST(nation_cents AS DOUBLE) / region_cents, 9)
-                   AS share_of_region,
-               ROUND(CAST(nation_cents AS DOUBLE) / total_cents, 9)
-                   AS share_of_total,
-               ROUND(CAST(region_cents AS DOUBLE) / total_cents, 9)
-                   AS region_share_of_total
-        FROM j ORDER BY region, nation
         """
 
 

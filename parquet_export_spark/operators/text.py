@@ -77,52 +77,6 @@ def quality_scores(t: dict[str, DataFrame]) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Language identification (marker-token heuristic)
-# --------------------------------------------------------------------------
-
-#: Marker tokens per language. The synthetic corpus is English-ish word
-#: soup, so markers are demonstrative; the heuristic structure (argmax
-#:  of per-language marker counts with a deterministic tie order) is
-#: what a real n-gram lang-ID would scale to.
-_MARKERS = {
-    "en": ("the", "a"),
-    "de": ("der", "und"),
-    "es": ("el", "la"),
-    "fr": ("le", "et"),
-}
-
-
-def _count_token(tok: str):
-    # count occurrences of token surrounded by spaces in ' text '
-    padded = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
-    needle = f" {tok} "
-    return (
-        (F.length(padded) - F.length(F.replace(padded, F.lit(needle), F.lit(""))))
-        / len(needle)
-    ).cast("int")
-
-
-def lang_id(t: dict[str, DataFrame]) -> DataFrame:
-    """Heuristic language ID + agreement with the labeled lang column."""
-    docs = t["documents"]
-    counts = {lang: sum(_count_token(m) for m in ms) for lang, ms in _MARKERS.items()}
-    best = F.greatest(*counts.values())
-    pred = F.when(best <= 0, F.lit("und"))
-    for lang in _MARKERS:  # dict order = deterministic tie-break
-        pred = pred.when(counts[lang] == best, F.lit(lang))
-    return (
-        docs.select(
-            "doc_id",
-            "lang",
-            *[counts[lang].alias(f"n_{lang}") for lang in _MARKERS],
-            pred.alias("pred_lang"),
-        )
-        .withColumn("agrees", F.col("pred_lang") == F.col("lang"))
-        .orderBy("doc_id")
-    )
-
-
-# --------------------------------------------------------------------------
 # Fingerprinting
 # --------------------------------------------------------------------------
 
@@ -288,23 +242,6 @@ def tfidf_top_terms(t: dict[str, DataFrame], k: int = 3) -> DataFrame:
         .filter(F.col("rank") <= k)
         .select("doc_id", "term", "score", "rank")
         .orderBy("doc_id", "rank")
-    )
-
-
-def lang_quality_summary(t: dict[str, DataFrame]) -> DataFrame:
-    """Corpus rollup: doc counts + mean length per (lang, source) —
-    the monitoring query a curation pipeline runs per batch."""
-    docs = t["documents"]
-    return (
-        docs.groupBy("lang", "source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-            (
-                F.sum("n_chars").cast("double") / F.count(F.lit(1)).cast("double")
-            ).alias("mean_chars"),
-        )
-        .orderBy("lang", "source")
     )
 
 

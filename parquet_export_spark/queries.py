@@ -1,5 +1,7 @@
 """Query registry: each entry pairs a Spark DataFrame plan with the
 equivalent ANSI/DuckDB oracle SQL (driver contract in __spark_entry__.py).
+Where the oracle text runs unchanged on Spark it IS the plan: one string,
+registered through ``_sql_spec``.
 
 Alignment rules (see functions/scalar.py):
 - every computed column aliased identically on both sides;
@@ -183,24 +185,26 @@ def _graph_probe(op, exact_quantile: bool = True) -> QueryFn:
     return run
 
 
-def _sql(sql: str) -> QueryFn:
-    """Registry adapter for pure-SQL queries: register the lake's temp
-    views, then hand the string to Catalyst — the ANSI text IS the
-    plan declaration AND (verbatim) the oracle."""
+def _sql_spec(sql: str) -> QuerySpec:
+    """An entry whose oracle text runs unchanged on Spark: register the
+    lake's temp views and hand the one string to Catalyst, so it is both
+    the plan and the oracle. The string is kept as ``run.sql`` so tests
+    and docs can tell SQL entries apart; its leading ``-- `` line states
+    the entry's purpose (QUERIES.md reads it)."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Pure-SQL query: one ANSI string executed verbatim by Spark
-        and by the DuckDB oracle."""
         from parquet_export_spark.sources.lake import register_temp_views
 
         register_temp_views(spark, sf_dir)
         return spark.sql(sql)
 
-    return run
+    run.sql = sql
+    return QuerySpec(run, sql)
 
 
 #: shared verbatim by Spark and DuckDB — see "sql_segment_top_spenders"
 SEGMENT_TOP_SPENDERS_SQL = """
+    -- Top-3 customers by total spend per market segment
     WITH cust_rev AS (
         SELECT c_custkey, c_name, c_mktsegment,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(30,4))) AS DOUBLE)
@@ -226,6 +230,7 @@ SEGMENT_TOP_SPENDERS_SQL = """
 #: engine-identical on dates; formatted month strings are not), the
 #: revenue sum in exact decimal cast to double at presentation.
 COHORT_LTV_SQL = """
+    -- Monthly cohort lifetime value: revenue by months since first order
     WITH firsts AS (
         SELECT o_custkey, MIN(o_orderdate) AS first_dt
         FROM orders GROUP BY o_custkey),
@@ -366,9 +371,9 @@ REGISTRY: dict[str, QuerySpec] = {
         ORDER BY revenue DESC, n_name
         """,
     ),
-    "q6_forecast_revenue": QuerySpec(
-        _rel(R.q6_forecast_revenue),
+    "q6_forecast_revenue": _sql_spec(
         f"""
+        -- TPC-H Q6 shape: pure scan+filter+global agg — pushdown showcase
         SELECT {dsum_sql('l_extendedprice * l_discount', scale=6)} AS revenue
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1996-01-01'
@@ -377,9 +382,9 @@ REGISTRY: dict[str, QuerySpec] = {
           AND l_quantity < 24
         """,
     ),
-    "q10_returned_items": QuerySpec(
-        _rel(R.q10_returned_items),
+    "q10_returned_items": _sql_spec(
         f"""
+        -- TPC-H Q10 shape: join fact->dims, agg by customer, top-k
         SELECT c_custkey, c_name, n_name,
                {dsum_sql(_REV, scale=6)} AS revenue
         FROM lineitem
@@ -395,26 +400,26 @@ REGISTRY: dict[str, QuerySpec] = {
         """,
     ),
     # ---------------- basic blocks ----------------
-    "filter_project": QuerySpec(
-        _rel(R.filter_project),
+    "filter_project": _sql_spec(
         """
+        -- Filter + projection; both reach the parquet scan
         SELECT l_orderkey, l_linenumber, l_quantity, l_discount
         FROM lineitem
         WHERE l_quantity > 45 AND l_discount > 0.05
         ORDER BY l_orderkey, l_linenumber
         """,
     ),
-    "join_inner": QuerySpec(
-        _rel(R.join_inner),
+    "join_inner": _sql_spec(
         """
+        -- Plain equi inner join over the orders->customer FK edge
         SELECT o_orderkey, c_name, o_totalprice
         FROM orders JOIN customer ON o_custkey = c_custkey
         ORDER BY o_orderkey
         """,
     ),
-    "join_left_nulls": QuerySpec(
-        _rel(R.join_left_nulls),
+    "join_left_nulls": _sql_spec(
         """
+        -- Left outer join keeping unmatched customers (null order side)
         SELECT c_custkey, o_orderkey, o_totalprice
         FROM customer
         LEFT JOIN (SELECT * FROM orders WHERE o_totalprice > 400000) o
@@ -422,36 +427,36 @@ REGISTRY: dict[str, QuerySpec] = {
         ORDER BY c_custkey, o_orderkey NULLS FIRST
         """,
     ),
-    "join_semi": QuerySpec(
-        _rel(R.join_semi),
+    "join_semi": _sql_spec(
         """
+        -- Customers with at least one urgent order (left semi)
         SELECT c_custkey, c_name FROM customer
         WHERE c_custkey IN (
             SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')
         ORDER BY c_custkey
         """,
     ),
-    "join_anti": QuerySpec(
-        _rel(R.join_anti),
+    "join_anti": _sql_spec(
         """
+        -- Customers with no urgent order (left anti on a filtered side)
         SELECT c_custkey, c_name FROM customer
         WHERE c_custkey NOT IN (SELECT o_custkey FROM orders
                                 WHERE o_orderpriority = '1-URGENT')
         ORDER BY c_custkey
         """,
     ),
-    "join_range": QuerySpec(
-        _rel(R.join_range),
+    "join_range": _sql_spec(
         """
+        -- Non-equi (range/theta) join: parts priced within a size-dependent band
         SELECT p_partkey, s_suppkey, p_retailprice, s_acctbal
         FROM part JOIN supplier
           ON p_size % 10 = s_suppkey % 10 AND p_retailprice > s_acctbal / 4
         ORDER BY p_partkey, s_suppkey
         """,
     ),
-    "set_ops": QuerySpec(
-        _rel(R.set_ops),
+    "set_ops": _sql_spec(
         """
+        -- UNION / INTERSECT / EXCEPT over customer-key sets
         WITH building AS (
             SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'),
         with_urgent AS (
@@ -468,9 +473,9 @@ REGISTRY: dict[str, QuerySpec] = {
         ORDER BY set_op, c_custkey
         """,
     ),
-    "set_ops_all": QuerySpec(
-        _rel(R.set_ops_all),
+    "set_ops_all": _sql_spec(
         """
+        -- Multiset variants: UNION ALL / INTERSECT ALL / EXCEPT ALL (bag semantics)
         WITH fr AS (SELECT l_orderkey FROM lineitem WHERE l_returnflag = 'R'),
         fn AS (SELECT l_orderkey FROM lineitem WHERE l_returnflag = 'N'),
         tagged AS (
@@ -508,18 +513,18 @@ REGISTRY: dict[str, QuerySpec] = {
         _rel(R.sample_fraction_checked),
         R.sample_fraction_checked_oracle_sql(),
     ),
-    "sort_limit_offset": QuerySpec(
-        _rel(R.sort_limit_offset),
+    "sort_limit_offset": _sql_spec(
         """
+        -- Deterministic pagination: total order + offset + limit
         SELECT o_orderkey, o_totalprice FROM orders
         ORDER BY o_totalprice DESC, o_orderkey
         LIMIT 25 OFFSET 10
         """,
     ),
     # ---------------- aggregation variants ----------------
-    "agg_distinct": QuerySpec(
-        _rel(R.agg_distinct),
+    "agg_distinct": _sql_spec(
         f"""
+        -- COUNT(DISTINCT) + plain aggregates per group
         SELECT o_orderstatus,
                COUNT(DISTINCT o_custkey) AS n_customers,
                COUNT(*) AS n_orders,
@@ -551,9 +556,9 @@ REGISTRY: dict[str, QuerySpec] = {
         ORDER BY gid, l_returnflag, l_linestatus
         """,
     ),
-    "agg_stats": QuerySpec(
-        _rel(R.agg_stats),
+    "agg_stats": _sql_spec(
         f"""
+        -- Min/max/count + conditional aggregation (CASE WHEN inside agg)
         SELECT l_returnflag,
                MIN(l_quantity) AS min_qty,
                MAX(l_quantity) AS max_qty,
@@ -589,9 +594,9 @@ REGISTRY: dict[str, QuerySpec] = {
         WHERE rn <= 3 ORDER BY o_custkey, rn
         """,
     ),
-    "window_running_sum": QuerySpec(
-        _rel(R.window_running_sum),
+    "window_running_sum": _sql_spec(
         """
+        -- Running per-customer revenue ordered by date (unbounded-preceding frame)
         SELECT o_custkey, o_orderkey, o_orderdate,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(30,4))) OVER (
                    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
@@ -612,9 +617,9 @@ REGISTRY: dict[str, QuerySpec] = {
         ORDER BY user_id, ts, event_id
         """,
     ),
-    "window_rank_dense": QuerySpec(
-        _rel(R.window_rank_dense),
+    "window_rank_dense": _sql_spec(
         """
+        -- rank / dense_rank / ntile over part prices within brand
         SELECT p_brand, p_partkey, p_retailprice,
                CAST(RANK() OVER w AS INTEGER) AS price_rank,
                CAST(DENSE_RANK() OVER w AS INTEGER) AS price_dense_rank,
@@ -650,9 +655,9 @@ REGISTRY: dict[str, QuerySpec] = {
         FROM orders ORDER BY o_orderkey
         """,
     ),
-    "scalar_math_funcs": QuerySpec(
-        _rel(R.scalar_math_funcs),
+    "scalar_math_funcs": _sql_spec(
         """
+        -- Math family: round/floor/ceil/abs/pmod/sqrt
         SELECT p_partkey,
                ROUND(p_retailprice * 2, 2) AS inflated,
                CAST(FLOOR(p_retailprice) AS BIGINT) AS price_floor,
@@ -711,9 +716,9 @@ _QUALITY_EXPRS = """
 REGISTRY.update(
     {
         # ---------------- extended function families ----------------
-        "window_range_frame": QuerySpec(
-            _rel(FE.window_range_frame),
+        "window_range_frame": _sql_spec(
             """
+            -- RANGE frame over a numeric ordering: per-customer totals over 5 order-keys back
             SELECT o_custkey, o_orderkey,
                    CAST(SUM(CAST(o_totalprice AS DECIMAL(30,4))) OVER (
                        PARTITION BY o_custkey ORDER BY o_orderkey
@@ -722,9 +727,9 @@ REGISTRY.update(
             FROM orders ORDER BY o_custkey, o_orderkey
             """,
         ),
-        "window_distribution_ranks": QuerySpec(
-            _rel(FE.window_distribution_ranks),
+        "window_distribution_ranks": _sql_spec(
             """
+            -- percent_rank / cume_dist / first & last value with explicit frames, per brand
             SELECT p_brand, p_partkey,
                    ROUND(PERCENT_RANK() OVER w, 9) AS pct_rank,
                    ROUND(CUME_DIST() OVER w, 9) AS cume,
@@ -769,9 +774,9 @@ REGISTRY.update(
             FROM orders ORDER BY o_orderkey
             """,
         ),
-        "conditional_funcs": QuerySpec(
-            _rel(FE.conditional_funcs),
+        "conditional_funcs": _sql_spec(
             """
+            -- least / greatest / sign / width-bucket-style binning
             SELECT p_partkey,
                    LEAST(p_size, 25) AS size_capped,
                    GREATEST(p_size, 10) AS size_floored,
@@ -781,9 +786,9 @@ REGISTRY.update(
             """,
         ),
         # ---------------- statistical aggregates ----------------
-        "stats_moments": QuerySpec(
-            _rel(ST.stats_moments),
+        "stats_moments": _sql_spec(
             """
+            -- Mean / sample variance / stddev of quantity per return flag (exact sums)
             SELECT l_returnflag,
                    ROUND(sx / n, 9) AS mean_qty,
                    ROUND((sxx - sx * sx / n) / (n - 1.0), 9) AS var_qty,
@@ -799,9 +804,9 @@ REGISTRY.update(
             ORDER BY l_returnflag
             """,
         ),
-        "stats_correlation": QuerySpec(
-            _rel(ST.stats_correlation),
+        "stats_correlation": _sql_spec(
             """
+            -- Pearson correlation of price vs quantity per status, from explicit decimal moments
             SELECT l_linestatus,
                    ROUND((n * sxy - sx * sy) /
                          (SQRT(n * sxx - sx * sx) * SQRT(n * syy - sy * sy)), 9)
@@ -873,9 +878,37 @@ REGISTRY.update(
         ),
         # quantity-weighted exact median per segment (lower-median
         # rule, one collapse + per-segment cumulative window).
-        "weighted_median_price_by_segment": QuerySpec(
-            _rel(ST.weighted_median_price_by_segment),
-            ST.weighted_median_price_by_segment_oracle_sql(),
+        "weighted_median_price_by_segment": _sql_spec(
+            """
+            -- Quantity-weighted median of line-item price per market segment
+            WITH li AS (
+              SELECT c.c_mktsegment,
+                     CAST(FLOOR(l.l_extendedprice * 100 + 0.5) AS BIGINT)
+                         AS cents,
+                     CAST(FLOOR(l.l_quantity + 0.5) AS BIGINT) AS w
+              FROM lineitem l
+              JOIN orders o ON l.l_orderkey = o.o_orderkey
+              JOIN customer c ON o.o_custkey = c.c_custkey),
+            g AS (
+              SELECT c_mktsegment, cents, SUM(w) AS w
+              FROM li GROUP BY 1, 2),
+            cum AS (
+              SELECT c_mktsegment, cents,
+                     SUM(w) OVER (PARTITION BY c_mktsegment ORDER BY cents
+                                  ROWS BETWEEN UNBOUNDED PRECEDING
+                                           AND CURRENT ROW) AS cum,
+                     SUM(w) OVER (PARTITION BY c_mktsegment) AS tot
+              FROM g),
+            hit AS (
+              SELECT c_mktsegment, cents, tot,
+                     ROW_NUMBER() OVER (PARTITION BY c_mktsegment
+                                        ORDER BY cents) AS rn
+              FROM cum WHERE 2 * cum >= tot)
+            SELECT c_mktsegment,
+                   CAST(tot AS BIGINT) AS total_weight,
+                   cents AS weighted_median_cents
+            FROM hit WHERE rn = 1 ORDER BY c_mktsegment
+            """,
         ),
         # WoW revenue-change decomposition into volume/rate/interaction
         # effects — exact int64 lanes + IEEE-deterministic divisions at
@@ -886,9 +919,35 @@ REGISTRY.update(
         ),
         # share-of-parent at each geography level: nation->region->
         # total ratios over one fact-side cents aggregate.
-        "share_of_parent_rollup": QuerySpec(
-            _rel(ST.share_of_parent_rollup),
-            ST.share_of_parent_rollup_oracle_sql(),
+        "share_of_parent_rollup": _sql_spec(
+            """
+            -- Share-of-parent at every level of the geography hierarchy
+            WITH nat AS (
+              SELECT n.n_regionkey AS rk, n.n_name AS nation,
+                     SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT))
+                         AS nation_cents
+              FROM orders o
+              JOIN customer c ON o.o_custkey = c.c_custkey
+              JOIN nation n ON c.c_nationkey = n.n_nationkey
+              GROUP BY 1, 2),
+            j AS (
+              SELECT r.r_name AS region, nat.nation,
+                     CAST(nat.nation_cents AS BIGINT) AS nation_cents,
+                     CAST(SUM(nat.nation_cents)
+                          OVER (PARTITION BY r.r_name) AS BIGINT)
+                         AS region_cents,
+                     CAST(SUM(nat.nation_cents) OVER () AS BIGINT)
+                         AS total_cents
+              FROM nat JOIN region r ON nat.rk = r.r_regionkey)
+            SELECT region, nation, nation_cents, region_cents, total_cents,
+                   ROUND(CAST(nation_cents AS DOUBLE) / region_cents, 9)
+                       AS share_of_region,
+                   ROUND(CAST(nation_cents AS DOUBLE) / total_cents, 9)
+                       AS share_of_total,
+                   ROUND(CAST(region_cents AS DOUBLE) / total_cents, 9)
+                       AS region_share_of_total
+            FROM j ORDER BY region, nation
+            """,
         ),
         # shuffle-key skew diagnostics (the report BEFORE the
         # salted_skew_join cure): heavy keys + exact per-key count
@@ -1047,12 +1106,12 @@ REGISTRY.update(
             FROM orders ORDER BY o_orderkey
             """,
         ),
-        "histogram_equidepth": QuerySpec(
-            _rel(ST.histogram_equidepth),
+        "histogram_equidepth": _sql_spec(
             # ntile over a TOTAL order (price, then key) — the
             # tie-break makes bucket assignment engine-identical;
             # lo/hi are raw column values, no arithmetic.
             """
+            -- Equi-depth (quantile) histogram of order totals
             SELECT bucket, COUNT(*) AS n_orders,
                    MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi
             FROM (SELECT o_totalprice,
@@ -1064,8 +1123,21 @@ REGISTRY.update(
         ),
         # Leave-one-out target encoding: exact-decimal category sums
         # broadcast, per-row (S - v)/(n - 1) map-side.
-        "target_encode_loo": QuerySpec(
-            _rel(ST.target_encode_loo), ST.target_encode_loo_oracle_sql()
+        "target_encode_loo": _sql_spec(
+            """
+            -- Leave-one-out target encoding of event_type against value
+            WITH g AS (
+              SELECT event_type,
+                     CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS s,
+                     CAST(COUNT(*) AS DOUBLE) AS n
+              FROM events GROUP BY event_type)
+            SELECT event_id, e.event_type, value,
+                   ROUND(CASE WHEN n > 1
+                              THEN (s - value) / (n - 1.0) END, 9)
+                       AS loo_mean
+            FROM events e JOIN g ON g.event_type = e.event_type
+            ORDER BY event_id
+            """,
         ),
         # Composed per-type anomaly profile: the three registered
         # anomaly singles called directly, oracle assembled from their
@@ -1157,9 +1229,44 @@ REGISTRY.update(
         # Skew/kurtosis per group: scale-invariant integer powers
         # (per-row int64, decimal(38,0) sums), byte-identical IEEE
         # moment folds (the stats_correlation recipe, extended).
-        "stats_higher_moments": QuerySpec(
-            _rel(ST.stats_higher_moments),
-            ST.stats_higher_moments_oracle_sql(),
+        "stats_higher_moments": _sql_spec(
+            """
+            -- Skewness and excess kurtosis of quantity per return flag
+            SELECT l_returnflag, CAST(n AS BIGINT) AS n_items,
+                   ROUND(CASE WHEN (s2 / n - (s1 / n) * (s1 / n)) > 0
+                         THEN (s3 / n - 3.0 * (s1 / n) * (s2 / n)
+                               + 2.0 * (s1 / n) * (s1 / n) * (s1 / n))
+                              / ((s2 / n - (s1 / n) * (s1 / n))
+                                 * SQRT(s2 / n - (s1 / n) * (s1 / n)))
+                         END, 9) AS skewness,
+                   ROUND(CASE WHEN (s2 / n - (s1 / n) * (s1 / n)) > 0
+                         THEN (s4 / n - 4.0 * (s1 / n) * (s3 / n)
+                               + 6.0 * (s1 / n) * (s1 / n) * (s2 / n)
+                               - 3.0 * (s1 / n) * (s1 / n) * (s1 / n)
+                                 * (s1 / n))
+                              / ((s2 / n - (s1 / n) * (s1 / n))
+                                 * (s2 / n - (s1 / n) * (s1 / n))) - 3.0
+                         END, 9) AS kurtosis_excess
+            FROM (
+              SELECT l_returnflag,
+                     CAST(COUNT(*) AS DOUBLE) AS n,
+                     CAST(SUM(CAST(CAST(l_quantity * 100 AS BIGINT)
+                                   AS DECIMAL(38,0))) AS DOUBLE) AS s1,
+                     CAST(SUM(CAST(CAST(l_quantity * 100 AS BIGINT)
+                                   * CAST(l_quantity * 100 AS BIGINT)
+                                   AS DECIMAL(38,0))) AS DOUBLE) AS s2,
+                     CAST(SUM(CAST(CAST(l_quantity * 100 AS BIGINT)
+                                   * CAST(l_quantity * 100 AS BIGINT)
+                                   * CAST(l_quantity * 100 AS BIGINT)
+                                   AS DECIMAL(38,0))) AS DOUBLE) AS s3,
+                     CAST(SUM(CAST(CAST(l_quantity * 100 AS BIGINT)
+                                   * CAST(l_quantity * 100 AS BIGINT)
+                                   * (CAST(l_quantity * 100 AS BIGINT)
+                                      * CAST(l_quantity * 100 AS BIGINT))
+                                   AS DECIMAL(38,0))) AS DOUBLE) AS s4
+              FROM lineitem GROUP BY l_returnflag)
+            ORDER BY l_returnflag
+            """,
         ),
         # Customer value-migration grid: per-period rank-based
         # quintiles (relative movement, growth-immune), midpoint by
@@ -1177,9 +1284,26 @@ REGISTRY.update(
         # Herfindahl revenue concentration per segment: decimal-exact
         # quadratic sums (per-customer cents squared leaves int64 at
         # lake scale), one IEEE fold.
-        "hhi_concentration_by_segment": QuerySpec(
-            _rel(ST.hhi_concentration_by_segment),
-            ST.hhi_concentration_oracle_sql(),
+        "hhi_concentration_by_segment": _sql_spec(
+            """
+            -- Herfindahl-Hirschman revenue concentration per market segment
+            WITH per AS (
+              SELECT o_custkey,
+                     CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5)
+                                   AS BIGINT)) AS BIGINT) AS c
+              FROM orders GROUP BY o_custkey)
+            SELECT cu.c_mktsegment AS segment,
+                   CAST(COUNT(*) AS BIGINT) AS n_customers,
+                   CAST(SUM(p.c) AS BIGINT) AS total_cents,
+                   ROUND(CAST(SUM(CAST(p.c AS DECIMAL(19,0))
+                                   * CAST(p.c AS DECIMAL(19,0))) AS DOUBLE)
+                         / (CAST(SUM(CAST(p.c AS DECIMAL(19,0))) AS DOUBLE)
+                            * CAST(SUM(CAST(p.c AS DECIMAL(19,0)))
+                                   AS DOUBLE)), 9) AS hhi
+            FROM per p JOIN customer cu ON cu.c_custkey = p.o_custkey
+            GROUP BY cu.c_mktsegment
+            ORDER BY segment
+            """,
         ),
         # Atkinson(ε=2) inequality per segment: the ln-free
         # bottom-sensitive member of the family — femtounit-quantized
@@ -1265,18 +1389,18 @@ REGISTRY.update(
         "cusum_alarms": QuerySpec(
             _rel(ST.cusum_alarms), ST.cusum_alarms_oracle_sql()
         ),
-        "histogram_bins": QuerySpec(
-            _rel(ST.histogram_bins),
+        "histogram_bins": _sql_spec(
             """
+            -- Fixed-width histogram of order totals (width_bucket staple)
             SELECT CAST(FLOOR(o_totalprice / 50000) AS INTEGER) AS price_bin,
                    COUNT(*) AS n_orders
             FROM orders GROUP BY 1 ORDER BY price_bin
             """,
         ),
         # ---------------- dedup ----------------
-        "dedup_exact": QuerySpec(
-            _rel(D.dedup_exact),
+        "dedup_exact": _sql_spec(
             """
+            -- One row per distinct document text: content hash, copy count, keeper (min doc_id)
             SELECT md5(text) AS content_hash,
                    MIN(doc_id) AS keeper_doc_id,
                    COUNT(*) AS n_copies
@@ -1584,9 +1708,9 @@ REGISTRY.update(
             ORDER BY doc_id
             """,
         ),
-        "lang_id": QuerySpec(
-            _rel(X.lang_id),
+        "lang_id": _sql_spec(
             """
+            -- Heuristic language ID + agreement with the labeled lang column
             SELECT doc_id, lang, n_en, n_de, n_es, n_fr,
                    CASE WHEN GREATEST(n_en, n_de, n_es, n_fr) <= 0 THEN 'und'
                         WHEN n_en = GREATEST(n_en, n_de, n_es, n_fr) THEN 'en'
@@ -1967,9 +2091,9 @@ REGISTRY.update(
             FROM h ORDER BY shard, shard_pos
             """,
         ),
-        "next_event_examples": QuerySpec(
-            _rel(CU.next_event_examples),
+        "next_event_examples": _sql_spec(
             """
+            -- Supervised training examples from the event stream: context window -> next event
             WITH lagged AS (
                 SELECT user_id, event_id,
                        LAG(event_type, 3) OVER w AS l3,
@@ -2191,9 +2315,9 @@ REGISTRY.update(
             FROM chg ORDER BY user_id, valid_from
             """,
         ),
-        "event_transition_matrix": QuerySpec(
-            _rel(A.event_transition_matrix),
+        "event_transition_matrix": _sql_spec(
             """
+            -- First-order transition matrix over per-user event sequences
             WITH pairs AS (
                 SELECT event_type,
                        LEAD(event_type) OVER (PARTITION BY user_id
@@ -2548,9 +2672,9 @@ REGISTRY.update(
             WHERE rank <= 3 ORDER BY doc_id, rank
             """,
         ),
-        "lang_quality_summary": QuerySpec(
-            _rel(X.lang_quality_summary),
+        "lang_quality_summary": _sql_spec(
             """
+            -- Corpus rollup: doc counts + mean length per (lang, source)
             SELECT lang, source,
                    COUNT(*) AS n_docs,
                    CAST(SUM(n_chars) AS BIGINT) AS total_chars,
@@ -2560,9 +2684,9 @@ REGISTRY.update(
             """,
         ),
         # ---------------- deeper TPC-H shapes ----------------
-        "q2_min_balance_supplier": QuerySpec(
-            _rel(TE.q2_min_balance_supplier),
+        "q2_min_balance_supplier": _sql_spec(
             """
+            -- Q2 shape: correlated MIN subquery, the lowest-balance supplier of each part
             WITH supply AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
             j AS (SELECT l_partkey, s_suppkey, s_name, s_acctbal
                   FROM supply JOIN supplier ON l_suppkey = s_suppkey)
@@ -2573,9 +2697,9 @@ REGISTRY.update(
             ORDER BY p_partkey, s_suppkey
             """,
         ),
-        "q7_nation_pair_volume": QuerySpec(
-            _rel(TE.q7_nation_pair_volume),
+        "q7_nation_pair_volume": _sql_spec(
             f"""
+            -- Q7 shape: revenue between supplier-nation and customer-nation pairs per year
             SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                    CAST(YEAR(l_shipdate) AS INTEGER) AS ship_year,
                    {dsum_sql(_REV, scale=6)} AS volume
@@ -2591,9 +2715,9 @@ REGISTRY.update(
             ORDER BY supp_nation, cust_nation, ship_year
             """,
         ),
-        "q8_market_share": QuerySpec(
-            _rel(TE.q8_market_share),
+        "q8_market_share": _sql_spec(
             f"""
+            -- Q8 shape: one nation's share of regional revenue per year
             SELECT CAST(YEAR(o_orderdate) AS INTEGER) AS order_year,
                    {dsum_sql("CASE WHEN n_name = 'NATION_13' THEN " + _REV + " ELSE 0.0 END", scale=6)}
                    / {dsum_sql(_REV, scale=6)} AS mkt_share
@@ -2606,9 +2730,9 @@ REGISTRY.update(
             GROUP BY YEAR(o_orderdate) ORDER BY order_year
             """,
         ),
-        "q9_product_profit": QuerySpec(
-            _rel(TE.q9_product_profit),
+        "q9_product_profit": _sql_spec(
             f"""
+            -- Q9 shape: profit of pattern-matched parts by supplier nation and year
             SELECT n_name AS supp_nation,
                    CAST(YEAR(l_shipdate) AS INTEGER) AS ship_year,
                    {dsum_sql(_REV + " - 0.4 * p_retailprice * l_quantity", scale=6)}
@@ -2622,9 +2746,9 @@ REGISTRY.update(
             ORDER BY supp_nation, ship_year
             """,
         ),
-        "q13_order_count_distribution": QuerySpec(
-            _rel(TE.q13_order_count_distribution),
+        "q13_order_count_distribution": _sql_spec(
             """
+            -- Q13 shape: orders per customer (zero-order kept), then customers per order count
             SELECT n_orders, COUNT(*) AS n_customers
             FROM (SELECT c_custkey, COUNT(o_orderkey) AS n_orders
                   FROM customer LEFT JOIN orders ON c_custkey = o_custkey
@@ -2633,9 +2757,9 @@ REGISTRY.update(
             ORDER BY n_customers DESC, n_orders DESC
             """,
         ),
-        "q11_important_parts": QuerySpec(
-            _rel(TE.q11_important_parts),
+        "q11_important_parts": _sql_spec(
             f"""
+            -- Q11 shape: per-group value vs a GLOBAL-fraction threshold
             WITH per_part AS (
                 SELECT l_partkey,
                        {dsum_sql('l_extendedprice * l_quantity', scale=6)}
@@ -2649,9 +2773,9 @@ REGISTRY.update(
             ORDER BY part_value DESC, l_partkey
             """,
         ),
-        "q12_priority_shipclass": QuerySpec(
-            _rel(TE.q12_priority_shipclass),
+        "q12_priority_shipclass": _sql_spec(
             """
+            -- Q12 shape: high- vs low-priority order counts per return flag in a date band
             SELECT l_returnflag,
                    CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                                  THEN 1 ELSE 0 END) AS BIGINT)
@@ -2680,9 +2804,9 @@ REGISTRY.update(
             ORDER BY s_suppkey
             """,
         ),
-        "q16_supplier_counts": QuerySpec(
-            _rel(TE.q16_supplier_counts),
+        "q16_supplier_counts": _sql_spec(
             """
+            -- Q16 shape: distinct-supplier counts per part group, excluding suppliers via NOT IN
             SELECT p_brand, p_type, p_size,
                    COUNT(DISTINCT l_suppkey) AS supplier_cnt
             FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) supply
@@ -2694,9 +2818,9 @@ REGISTRY.update(
             ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
             """,
         ),
-        "q20_heavy_suppliers": QuerySpec(
-            _rel(TE.q20_heavy_suppliers),
+        "q20_heavy_suppliers": _sql_spec(
             f"""
+            -- Q20 shape: semi-join on an aggregate threshold (heavy widget suppliers)
             WITH wq AS (
                 SELECT l_suppkey AS wk, {dsum_sql('l_quantity')} AS widget_qty
                 FROM lineitem
@@ -2732,9 +2856,9 @@ REGISTRY.update(
             ORDER BY numwait DESC, s_suppkey
             """,
         ),
-        "funnel_signup_click_purchase": QuerySpec(
-            _rel(TE.funnel_signup_click_purchase),
+        "funnel_signup_click_purchase": _sql_spec(
             """
+            -- Event funnel: users whose first signup precedes first click precedes first purchase
             SELECT user_id, first_signup, first_click, first_purchase
             FROM (
                 SELECT user_id,
@@ -2754,9 +2878,9 @@ REGISTRY.update(
             """,
         ),
         # ---------------- subquery shapes ----------------
-        "q4_order_priority_exists": QuerySpec(
-            _rel(A.q4_order_priority_exists),
+        "q4_order_priority_exists": _sql_spec(
             """
+            -- TPC-H Q4 shape: EXISTS correlated subquery -> left-semi join
             SELECT o_orderpriority, COUNT(*) AS order_count
             FROM orders
             WHERE o_orderdate >= TIMESTAMP '1996-07-01'
@@ -2778,9 +2902,9 @@ REGISTRY.update(
             WHERE p_brand = 'Brand#11' AND l_quantity < 0.5 * avg_qty
             """,
         ),
-        "q18_large_orders_having": QuerySpec(
-            _rel(A.q18_large_orders_having),
+        "q18_large_orders_having": _sql_spec(
             f"""
+            -- TPC-H Q18 shape: groupBy + HAVING on the aggregate
             SELECT c_custkey, c_name, o_orderkey, o_orderdate, total_qty
             FROM (SELECT l_orderkey, {dsum_sql('l_quantity')} AS total_qty
                   FROM lineitem GROUP BY l_orderkey
@@ -2790,9 +2914,9 @@ REGISTRY.update(
             ORDER BY total_qty DESC, o_orderkey
             """,
         ),
-        "q19_disjunctive_predicates": QuerySpec(
-            _rel(A.q19_disjunctive_predicates),
+        "q19_disjunctive_predicates": _sql_spec(
             f"""
+            -- TPC-H Q19 shape: OR-of-ANDs join predicate over a common equi-key
             SELECT {dsum_sql(_REV, scale=6)} AS revenue, COUNT(*) AS n_items
             FROM lineitem JOIN part ON l_partkey = p_partkey
             WHERE (p_brand = 'Brand#11' AND p_size <= 15
@@ -2802,9 +2926,9 @@ REGISTRY.update(
                OR (p_type = 'PROMO' AND l_discount >= 0.05)
             """,
         ),
-        "q22_inactive_rich_customers": QuerySpec(
-            _rel(A.q22_inactive_rich_customers),
+        "q22_inactive_rich_customers": _sql_spec(
             f"""
+            -- TPC-H Q22 shape: scalar subquery (global avg) + anti join
             SELECT c_mktsegment,
                    COUNT(*) AS n_customers,
                    {dsum_sql('c_acctbal')} AS total_bal
@@ -2817,9 +2941,9 @@ REGISTRY.update(
             GROUP BY c_mktsegment ORDER BY c_mktsegment
             """,
         ),
-        "q14_promo_revenue_share": QuerySpec(
-            _rel(A.q14_promo_revenue_share),
+        "q14_promo_revenue_share": _sql_spec(
             f"""
+            -- TPC-H Q14 shape: conditional aggregate ratio
             SELECT {dsum_sql("CASE WHEN p_type = 'PROMO' THEN " + _REV + " ELSE 0.0 END", scale=6)}
                    / {dsum_sql(_REV, scale=6)} AS promo_share
             FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -2984,9 +3108,9 @@ REGISTRY.update(
             FROM customer GROUP BY c_nationkey ORDER BY c_nationkey
             """,
         ),
-        "unpivot_segment_counts": QuerySpec(
-            _rel(A.unpivot_segment_counts),
+        "unpivot_segment_counts": _sql_spec(
             """
+            -- Unpivot (melt) the pivoted segment table back to long form
             SELECT c_nationkey, c_mktsegment AS segment,
                    COUNT(*) AS n_customers
             FROM customer GROUP BY c_nationkey, c_mktsegment
@@ -3012,9 +3136,9 @@ REGISTRY.update(
             ORDER BY gid, l_returnflag, l_linestatus
             """,
         ),
-        "null_handling_funcs": QuerySpec(
-            _rel(A.null_handling_funcs),
+        "null_handling_funcs": _sql_spec(
             """
+            -- coalesce / nullif / nvl2 / null-safe equality over the left-join null surface
             SELECT c_custkey,
                    COALESCE(o_orderkey, -1) AS orderkey_or_default,
                    NULLIF(o_orderstatus, 'F') AS status_nullif_f,
@@ -3403,9 +3527,24 @@ REGISTRY.update(
         ),
         # Simpson diversity (1 - sum p²): the ln-free diversity index
         # — exact int64 cross-products, one IEEE divide.
-        "simpson_diversity_by_user": QuerySpec(
-            _rel(A.simpson_diversity_by_user),
-            A.simpson_diversity_oracle_sql(),
+        "simpson_diversity_by_user": _sql_spec(
+            """
+            -- Behavioral diversity per user: the Simpson index over the event-type mix
+            WITH counts AS (
+              SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS c
+              FROM events GROUP BY user_id, event_type),
+            agg AS (
+              SELECT user_id,
+                     CAST(SUM(c) AS BIGINT) AS n_events,
+                     CAST(COUNT(*) AS BIGINT) AS n_types,
+                     CAST(SUM(c * c) AS BIGINT) AS sq
+              FROM counts GROUP BY user_id)
+            SELECT user_id, n_events, n_types,
+                   ROUND(1.0 - CAST(sq AS DOUBLE)
+                         / CAST(n_events * n_events AS DOUBLE), 9)
+                       AS simpson
+            FROM agg ORDER BY user_id
+            """,
         ),
         # Strict local maxima on the DENSE hourly series (zeros enter
         # the grid — observed-only lag/lead invents and hides peaks at
@@ -3447,9 +3586,9 @@ REGISTRY.update(
         # Skyline/Pareto frontier: pre-aggregate to (segment, date)
         # then one cumulative-max window over the DATE-bounded
         # candidates — the window never sees the fact table.
-        "pareto_frontier_orders": QuerySpec(
-            _rel(A.pareto_frontier_orders),
+        "pareto_frontier_orders": _sql_spec(
             """
+            -- Per-segment Pareto frontier of (order date, order total)
             WITH daily AS (
               SELECT c_mktsegment, o_orderdate,
                      MAX(o_totalprice) AS best_total
@@ -3588,9 +3727,9 @@ REGISTRY.update(
             ORDER BY win_start, event_type
             """,
         ),
-        "snapshot_diff": QuerySpec(
-            _rel(ST.snapshot_diff_orders),
+        "snapshot_diff": _sql_spec(
             """
+            -- CDC-style diff of two lake snapshots: inserted, deleted and updated keys
             WITH new_snap AS (
                 SELECT o_orderkey,
                        CASE WHEN o_orderkey % 97 = 0
@@ -4016,9 +4155,9 @@ REGISTRY.update(
             ORDER BY user_id, burst_start
             """,
         ),
-        "ols_value_by_hour": QuerySpec(
-            _rel(ST.ols_value_by_hour),
+        "ols_value_by_hour": _sql_spec(
             """
+            -- Closed-form OLS regression in the engine: per event_type, value ~ hour-of-day
             SELECT event_type,
                    ROUND((n*sxy - sx*sy)/NULLIF(n*sxx - sx*sx, 0), 9)
                        AS slope_per_hour,
@@ -4041,9 +4180,9 @@ REGISTRY.update(
             ORDER BY event_type
             """,
         ),
-        "dedup_incremental": QuerySpec(
-            _rel(D.dedup_incremental),
+        "dedup_incremental": _sql_spec(
             f"""
+            -- Incremental exact dedup: a new document batch checked against the existing corpus
             WITH docs AS (SELECT doc_id, md5(text) AS content_hash
                           FROM documents),
             new_b AS (SELECT * FROM docs
@@ -4282,16 +4421,10 @@ REGISTRY.update(
         # BOTH engines (spark.sql over registered temp views / DuckDB
         # over the same parquet) — the portability the exact-decimal
         # discipline buys. CTE + join + grouped agg + ranked window.
-        "sql_segment_top_spenders": QuerySpec(
-            _sql(SEGMENT_TOP_SPENDERS_SQL),
-            SEGMENT_TOP_SPENDERS_SQL,
-        ),
+        "sql_segment_top_spenders": _sql_spec(SEGMENT_TOP_SPENDERS_SQL),
         # second SQL-entry member: the ANSI text is both plan and
         # oracle, verbatim (see COHORT_LTV_SQL).
-        "sql_cohort_ltv": QuerySpec(
-            _sql(COHORT_LTV_SQL),
-            COHORT_LTV_SQL,
-        ),
+        "sql_cohort_ltv": _sql_spec(COHORT_LTV_SQL),
         "source_capped_sample": QuerySpec(
             _rel(CU.source_capped_sample),
             """

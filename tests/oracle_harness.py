@@ -176,3 +176,19 @@ def fixture_lake(spark, sf_dir: str, out_dir: str, replacements: dict) -> str:
         shutil.move(part, os.path.join(out_dir, f"{name}.parquet"))
         shutil.rmtree(staging, ignore_errors=True)
     return out_dir
+
+
+def run_sql_entry(spark, name: str, tables: dict):
+    """Run SQL registry entry ``name`` over ``tables`` (view name ->
+    DataFrame), each registered as a temp view first: the fixture-dict
+    call of an entry whose plan is its oracle text. The views are
+    dropped once the query is analyzed, so no later query reads them."""
+    from parquet_export_spark.queries import REGISTRY
+
+    for view, df in tables.items():
+        df.createOrReplaceTempView(view)
+    try:
+        return spark.sql(REGISTRY[name].fn.sql)
+    finally:
+        for view in tables:
+            spark.catalog.dropTempView(view)

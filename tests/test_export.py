@@ -552,7 +552,7 @@ def test_zero_row_export_roundtrips(spark, tmp_path):
     spec = TableSpec(name="emptytbl", datatypes={}, rows_per_file=100)
     files = write_table(df, out, spec)
     assert files == ["emptytbl_0_0_zstd.parquet"]
-    write_manifest(out, {"emptytbl": files})
+    write_manifest(out, {"emptytbl": files}, spark)
     back = load_manifest_table(spark, out, "emptytbl")
     assert back.count() == 0
     assert back.schema.fieldNames() == ["id", "name"]

@@ -850,12 +850,12 @@ def test_snapshot_diff_change_feed_reconstructs_new_snapshot(spark, sf_dir):
     (the property an incremental consumer relies on)."""
     from pyspark.sql import functions as F
 
-    from parquet_export_spark.operators.stats import snapshot_diff_orders
     from parquet_export_spark.sources.lake import load_tables
+    from tests.oracle_harness import run_sql_entry
 
     t = load_tables(spark, sf_dir)
     o = t["orders"]
-    feed = snapshot_diff_orders(t).collect()
+    feed = run_sql_entry(spark, "snapshot_diff", t).collect()
     old_keys = {r.o_orderkey for r in o.select("o_orderkey").collect()}
     inserted = {r.o_orderkey for r in feed if r.change_type == "insert"}
     deleted = {r.o_orderkey for r in feed if r.change_type == "delete"}

@@ -28,7 +28,63 @@ from tests.oracle_harness import compare
 
 #: registry entries whose Spark plan or oracle text changed most
 #: recently — each swept at all three SFs every pytest run.
-CHANGED = ["bpe_encode_corpus"]
+CHANGED = [
+    "q2_min_balance_supplier",
+    "q4_order_priority_exists",
+    "q6_forecast_revenue",
+    "q7_nation_pair_volume",
+    "q8_market_share",
+    "q9_product_profit",
+    "q10_returned_items",
+    "q11_important_parts",
+    "q12_priority_shipclass",
+    "q13_order_count_distribution",
+    "q14_promo_revenue_share",
+    "q16_supplier_counts",
+    "q18_large_orders_having",
+    "q19_disjunctive_predicates",
+    "q20_heavy_suppliers",
+    "q22_inactive_rich_customers",
+    "filter_project",
+    "join_inner",
+    "join_left_nulls",
+    "join_semi",
+    "join_anti",
+    "join_range",
+    "set_ops",
+    "set_ops_all",
+    "sort_limit_offset",
+    "agg_distinct",
+    "agg_stats",
+    "window_running_sum",
+    "window_rank_dense",
+    "window_range_frame",
+    "window_distribution_ranks",
+    "scalar_math_funcs",
+    "conditional_funcs",
+    "null_handling_funcs",
+    "unpivot_segment_counts",
+    "stats_moments",
+    "stats_correlation",
+    "stats_higher_moments",
+    "weighted_median_price_by_segment",
+    "share_of_parent_rollup",
+    "hhi_concentration_by_segment",
+    "simpson_diversity_by_user",
+    "histogram_bins",
+    "histogram_equidepth",
+    "target_encode_loo",
+    "ols_value_by_hour",
+    "pareto_frontier_orders",
+    "snapshot_diff",
+    "dedup_exact",
+    "dedup_incremental",
+    "lang_id",
+    "lang_quality_summary",
+    "next_event_examples",
+    "event_transition_matrix",
+    "funnel_signup_click_purchase",
+]
 
 #: the three scale-factor lakes sit side by side with the suite's own.
 SWEEP_DIRS = [

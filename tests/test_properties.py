@@ -13,7 +13,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
-from parquet_export_spark.export.pipeline import export_table
+from parquet_export_spark.export.pipeline import export_table_with_metrics
 from parquet_export_spark.tables import TableSpec
 
 SPEC = TableSpec(
@@ -69,7 +69,7 @@ row_strategy = st.tuples(
 def test_export_roundtrip_preserves_values(spark, tmp_path_factory, rows):
     out = str(tmp_path_factory.mktemp("prop"))
     df = spark.createDataFrame(rows, INPUT_SCHEMA)
-    files = export_table(df, out, SPEC)
+    files = export_table_with_metrics(df, out, SPEC)[0]
     # empty input -> zero data files; schema then comes from the spec
     back = spark.read.schema(SPEC.schema).parquet(f"{out}/{SPEC.name}")
     # schema is the declared one
@@ -101,7 +101,7 @@ def test_export_roundtrip_preserves_values(spark, tmp_path_factory, rows):
 def test_export_empty_table(spark, tmp_path):
     out = str(tmp_path / "empty")
     df = spark.createDataFrame([], INPUT_SCHEMA)
-    files = export_table(df, out, SPEC)
+    files = export_table_with_metrics(df, out, SPEC)[0]
     # round-5 contract change: one schema-bearing empty part survives
     # (an empty manifest file list broke every manifest reader —
     # spark.read.parquet cannot be called with zero paths), named with
@@ -117,7 +117,7 @@ def test_final_partial_file_range_is_actual(spark, tmp_path):
     out = str(tmp_path / "partial")
     rows = [(i, None, None, None, None, None, None) for i in range(10)]
     df = spark.createDataFrame(rows, INPUT_SCHEMA).coalesce(1)
-    files = export_table(df, out, replace(SPEC, rows_per_file=7))
+    files = export_table_with_metrics(df, out, replace(SPEC, rows_per_file=7))[0]
     # 7 + 3: final partial file's name must state 3 rows, not 7
     # (deliberate fix of reference main.py:222 — SURVEY.md §4.3)
     assert files == [

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from parquet_export_spark.operators import advanced as A
 from parquet_export_spark.operators import stats as ST
 from parquet_export_spark.sources.lake import load_tables
+from tests.oracle_harness import run_sql_entry
 
 
 def _tables(spark, sf_dir):
@@ -133,7 +134,7 @@ def test_weighted_median_matches_reference(spark, sf_dir):
     t = _tables(spark, sf_dir)
     got = {
         r.c_mktsegment: (r.total_weight, r.weighted_median_cents)
-        for r in ST.weighted_median_price_by_segment(t).collect()
+        for r in run_sql_entry(spark, "weighted_median_price_by_segment", t).collect()
     }
     assert got
     rows = (
@@ -251,7 +252,7 @@ def test_wow_decomposition_identity_and_lanes(spark, sf_dir):
 
 def test_share_rollup_partitions_sum_exactly(spark, sf_dir):
     t = _tables(spark, sf_dir)
-    rows = ST.share_of_parent_rollup(t).collect()
+    rows = run_sql_entry(spark, "share_of_parent_rollup", t).collect()
     assert rows
     by_region: dict[str, list] = {}
     for r in rows:
@@ -549,8 +550,10 @@ def test_weighted_median_lower_rule(spark):
     c = spark.createDataFrame(
         [(7, "SEG")], "c_custkey long, c_mktsegment string"
     )
-    rows = ST.weighted_median_price_by_segment(
-        {"lineitem": li, "orders": o, "customer": c}
+    rows = run_sql_entry(
+        spark,
+        "weighted_median_price_by_segment",
+        {"lineitem": li, "orders": o, "customer": c},
     ).collect()
     assert [(r.c_mktsegment, r.total_weight, r.weighted_median_cents)
             for r in rows] == [("SEG", 10, 1000)]

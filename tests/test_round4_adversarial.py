@@ -179,12 +179,14 @@ def test_ols_degenerate_groups(spark, sf_dir, tmp_path):
     )
     _run(spark, fixture_dir, ["ols_value_by_hour"])
 
-    from parquet_export_spark.operators.stats import ols_value_by_hour
     from parquet_export_spark.sources.lake import load_tables
+    from tests.oracle_harness import run_sql_entry
 
     got = {
         r.event_type: (r.slope_per_hour, r.intercept)
-        for r in ols_value_by_hour(load_tables(spark, fixture_dir)).collect()
+        for r in run_sql_entry(
+            spark, "ols_value_by_hour", load_tables(spark, fixture_dir)
+        ).collect()
     }
     assert got["flat"] == (None, None)
     assert got["lone"] == (None, None)

