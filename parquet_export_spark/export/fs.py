@@ -10,15 +10,17 @@ on the same store). Every helper is O(#files) metadata work, no data
 movement — on object stores "rename" is the store's server-side
 copy+delete, still bounded by file count, not bytes scanned.
 
-Row counts come from parquet footers via parquet-hadoop's
-``ParquetFileReader`` (on Spark's classpath), so no table data is
-re-read to name files by row range.
+Row and null counts come from parquet footers (pyarrow for local
+files, parquet-hadoop's ``ParquetFileReader`` elsewhere), so no table
+data is re-read to name files by row range or to count the manifest's
+metrics.
 """
 
 from __future__ import annotations
 
 import os
 import warnings
+from collections.abc import Iterable
 from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
@@ -28,7 +30,7 @@ def _jpath(spark: SparkSession, path: str):
     return spark._jvm.org.apache.hadoop.fs.Path(path)
 
 
-def _local_path(path: str) -> str | None:
+def local_path(path: str) -> str | None:
     """The OS path of a local (no scheme or ``file:``) path, else None."""
     parsed = urlparse(path)
     if parsed.scheme in ("", "file"):
@@ -96,7 +98,7 @@ def rename(spark: SparkSession, src: str, dst: str) -> None:
     round-trip per file. Directories and remote schemes go through
     Hadoop.
     """
-    local_src, local_dst = _local_path(src), _local_path(dst)
+    local_src, local_dst = local_path(src), local_path(dst)
     if local_src is not None and local_dst is not None and os.path.isfile(local_src):
         _rename_local_file(local_src, local_dst)
         return
@@ -218,7 +220,20 @@ def read_text(spark: SparkSession, path: str) -> str:
 
 
 def parquet_row_count(spark: SparkSession, path: str) -> int:
-    """Row count from the parquet footer — metadata-only, no data read.
+    """Row count from the parquet footer — metadata-only, no data read."""
+    return parquet_footer_counts(spark, path, ())[0]
+
+
+def parquet_footer_counts(
+    spark: SparkSession, path: str, columns: Iterable[str]
+) -> tuple[int, dict[str, int]]:
+    """Row count and per-column null counts from the parquet footer —
+    metadata-only, no data read.
+
+    ``columns`` name flat (top-level, non-nested) columns; each one's
+    null count is the sum of its column chunks' ``null_count`` over the
+    row groups. A chunk without one raises ``ValueError``: the count is
+    never guessed.
 
     Local paths read the footer with pyarrow directly (one JVM
     roundtrip per file saved — measurable when renaming many committed
@@ -226,18 +241,36 @@ def parquet_row_count(spark: SparkSession, path: str) -> int:
     classpath), so object-store footers are readable without a
     Python-side S3 client.
     """
-    local = _local_path(path)
+    nulls = dict.fromkeys(columns, 0)
+    local = local_path(path)
     if local is not None:
         import pyarrow.parquet as pq
 
-        return pq.read_metadata(local).num_rows
+        meta = pq.read_metadata(local)
+        index = {meta.schema.column(i).path: i for i in range(meta.num_columns)}
+        for g in range(meta.num_row_groups):
+            group = meta.row_group(g)
+            for col in nulls:
+                stats = group.column(index[col]).statistics
+                if stats is None or not stats.has_null_count:
+                    raise ValueError(f"{path}: no null_count for column {col!r}")
+                nulls[col] += stats.null_count
+        return meta.num_rows, nulls
     jvm = spark._jvm
     infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         _jpath(spark, path), spark._jsc.hadoopConfiguration()
     )
     reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
     try:
-        return int(reader.getRecordCount())
+        if nulls:
+            for block in reader.getFooter().getBlocks():
+                chunks = {c.getPath().toDotString(): c for c in block.getColumns()}
+                for col in nulls:
+                    stats = chunks[col].getStatistics()
+                    if stats is None or not stats.isNumNullsSet():
+                        raise ValueError(f"{path}: no null_count for column {col!r}")
+                    nulls[col] += int(stats.getNumNulls())
+        return int(reader.getRecordCount()), nulls
     finally:
         reader.close()
 

@@ -35,9 +35,9 @@ def build_manifest(
         },
     }
     if metrics is not None:
-        # per-table quality metrics observed during the write itself
-        # (zero extra scans); additive to the reference's shape so
-        # existing manifest consumers are unaffected
+        # per-table quality metrics counted from the committed files'
+        # footers (zero extra scans); additive to the reference's shape
+        # so existing manifest consumers are unaffected
         manifest["metrics"] = metrics
     return manifest
 

@@ -36,37 +36,17 @@ def export_table_with_metrics(
 ) -> tuple[list[str], dict]:
     """Export one table and return (files, quality metrics).
 
-    Metrics ride the write itself via ``df.observe`` — Spark evaluates
-    the aggregates inside the already-running write job, so row and
-    per-column null counts cost ZERO extra scans (the reference has no
+    Row and per-column null counts come from the committed files'
+    parquet footers, which the row-range naming reads anyway (see
+    ``write_table``), so they cost no extra scan (the reference has no
     quality reporting at all; a separate count pass at 100 TB would
     re-read the table). Recorded into the manifest so a consumer can
     validate a snapshot without touching the data files.
     """
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
     df = enforce_schema(df, spec)
     df = normalize_json_columns(df, spec, canonical=canonical_json)
-    obs = Observation()
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_rows"),
-        *[
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
-            .cast("long")
-            .alias(f"n_null_{c}")
-            for c in df.columns
-        ],
-    )
-    files = write_table(observed, out_dir, spec)
-    got = obs.get  # blocks until the write action finishes
-    metrics = {
-        "n_rows": got["n_rows"],
-        "null_counts": {
-            c: got[f"n_null_{c}"] for c in df.columns if got[f"n_null_{c}"]
-        },
-    }
+    metrics: dict = {}
+    files = write_table(df, out_dir, spec, metrics=metrics)
     return files, metrics
 
 

@@ -10,7 +10,7 @@ built from the export engine's existing committed-files manifest:
 - files land under ``{out}/v{N}/{table}/`` — a version directory is
   itself a complete lake prefix, never modified after commit;
 - ``manifest-v{N}.json`` lists exactly that version's files (plus the
-  observe()-collected quality metrics);
+  footer-counted quality metrics);
 - the manifest write IS the commit; a single tiny ``latest`` pointer,
   refreshed last, is only a resolution cache (current_version falls
   back to the manifest listing whenever the pointer is absent).

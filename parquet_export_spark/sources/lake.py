@@ -53,13 +53,51 @@ def load_table(
     # PARQUET_TYPE_ILLEGAL. Runtime-settable, so apply defensively —
     # the driver's own SparkSession may not have it.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    path = table_path(lake_dir, name)
+    read_schema = schema if schema is not None else _spark_written_schema(spark, path)
     reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.parquet(table_path(lake_dir, name))
+    if read_schema is not None:
+        reader = reader.schema(read_schema)
+    df = reader.parquet(path)
     if schema is None:
         df = _restore_nanos_columns(df, name)
     return df
+
+
+#: footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _spark_written_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark's inference would give ``path``, read on the
+    driver, or None where only inference can give it.
+
+    With ``mergeSchema`` off, inference reads one footer, in a one-task
+    Spark job, and takes the schema Spark's writer stored there. For a
+    local file, or a local directory without subdirectories, the first
+    data file's footer is read here with pyarrow instead, and no job
+    runs. Remote schemes, partition subdirectories and files written by
+    other writers (no stored schema) keep Spark's inference.
+    """
+    from parquet_export_spark.export.fs import local_path
+
+    local = local_path(path)
+    if local is None or spark.conf.get("spark.sql.parquet.mergeSchema").lower() == "true":
+        return None
+    if os.path.isdir(local):
+        entries = sorted(os.scandir(local), key=lambda e: e.name)
+        data = [e for e in entries if not e.name.startswith(("_", "."))]
+        if not data or any(e.is_dir() for e in data):
+            return None
+        local = data[0].path
+    elif not os.path.isfile(local):
+        return None
+    import json
+
+    import pyarrow.parquet as pq
+
+    stored = (pq.read_metadata(local).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    return None if stored is None else T.StructType.fromJson(json.loads(stored))
 
 
 #: Columns stored as TIMESTAMP(NANOS) in the driver's testdata; under

@@ -52,18 +52,105 @@ def test_manifest_shape(exported):
             assert os.path.exists(os.path.join(out_dir, obj))
 
 
+def _recount(df) -> dict:
+    """``n_rows`` and every column's nonzero null count, by one
+    aggregate pass over ``df`` (the manifest's ``metrics`` shape)."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("__n_rows"),
+        *[F.count(F.when(F.col(c).isNull(), 1)).alias(c) for c in df.columns],
+    ).first()
+    return {
+        "n_rows": row["__n_rows"],
+        "null_counts": {c: row[c] for c in df.columns if row[c]},
+    }
+
+
+def _last_execution_id(spark) -> int:
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return max(
+        (executions.apply(i).executionId() for i in range(executions.size())),
+        default=-1,
+    )
+
+
+def _physical_plans_since(spark, execution_id: int) -> list[str]:
+    """Physical plans of the SQL executions after ``execution_id``."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    found = [executions.apply(i) for i in range(executions.size())]
+    return [e.physicalPlanDescription() for e in found if e.executionId() > execution_id]
+
+
 def test_manifest_metrics_observed_during_write(exported, spark):
-    """The manifest's per-table metrics (observed inside the write job,
-    zero extra scans) must equal what a separate count pass sees."""
+    """The manifest's per-table metrics (summed from the committed
+    files' parquet footers, zero extra scans) must equal a separate
+    recount: the row count and the whole ``null_counts`` dict, so a
+    column with nulls missing from it fails too."""
     out_dir, _, dfs = exported
     with open(os.path.join(out_dir, "manifest.json")) as fh:
         manifest = json.load(fh)
     assert set(manifest["metrics"]) == set(TABLES)
     for table, m in manifest["metrics"].items():
-        assert m["n_rows"] == dfs[table].count()
-        for col, n_null in m.get("null_counts", {}).items():
-            want = dfs[table].filter(F.col(col).isNull()).count()
-            assert n_null == want, (table, col)
+        assert m == _recount(dfs[table].select(TABLES[table].columns)), table
+    assert any(m["null_counts"] for m in manifest["metrics"].values())
+
+
+def test_manifest_null_counts_of_values_over_4kb(spark, tmp_path):
+    """Binary and text values whose min+max exceed 4 KB, with nulls:
+    the writer truncates binary statistics so parquet-mr keeps each
+    chunk's null_count, which it drops with the whole Statistics
+    otherwise (the footer sum would then raise)."""
+    from parquet_export_spark.export.pipeline import export_table_with_metrics
+    from parquet_export_spark.tables import TableSpec
+
+    spec = TableSpec(
+        name="big",
+        datatypes={"id": "Int64", "blob": "object", "text": "string"},
+        rows_per_file=3,
+    )
+    rows = [
+        (i, None if i % 3 == 0 else bytes([i]) * 5000, None if i % 4 == 0 else chr(65 + i) * 6000)
+        for i in range(10)
+    ]
+    df = spark.createDataFrame(rows, "id long, blob binary, text string")
+    _, metrics = export_table_with_metrics(df, str(tmp_path), spec)
+    assert metrics == _recount(df) == {"n_rows": 10, "null_counts": {"blob": 4, "text": 3}}
+
+
+def test_declared_export_plans_no_collect_metrics(spark, tmp_path):
+    """Every column of a declared VerA table is counted from footers,
+    so no write job carries an ``observe`` (CollectMetrics)."""
+    dfs = fixture_dataframes(spark, 10)
+    first = _last_execution_id(spark)
+    export_lake(spark, lambda s, spec: dfs[spec.name], str(tmp_path))
+    plans = _physical_plans_since(spark, first)
+    assert len(plans) >= len(TABLES)
+    assert not [p for p in plans if "CollectMetrics" in p]
+
+
+def test_bare_spec_metrics_count_nested_and_int96_columns(spark, tmp_path):
+    """A bare-spec frame keeps its tz-aware timestamp (written as INT96,
+    whose statistics pyarrow does not read) and its array (leaf chunks
+    count null elements, not null rows): those two columns are counted
+    by an ``observe``, the rest from footers, and together they equal a
+    recount."""
+    from datetime import datetime, timezone
+
+    from parquet_export_spark.export.pipeline import export_table_with_metrics
+    from parquet_export_spark.tables import TableSpec
+
+    t = datetime(2024, 5, 1, 12, 0, tzinfo=timezone.utc)
+    rows = [(1, t, [1, None], None), (2, None, None, "x"), (None, t, [], "y")]
+    df = spark.createDataFrame(rows, "id long, ts timestamp, arr array<int>, s string")
+    first = _last_execution_id(spark)
+    _, metrics = export_table_with_metrics(
+        df, str(tmp_path), TableSpec(name="bare", datatypes={}, rows_per_file=2)
+    )
+    assert metrics == _recount(df) == {
+        "n_rows": 3,
+        "null_counts": {"id": 1, "ts": 1, "arr": 1, "s": 1},
+    }
+    assert [p for p in _physical_plans_since(spark, first) if "CollectMetrics" in p]
 
 
 def test_row_range_naming_and_bound(exported):
@@ -386,6 +473,21 @@ def test_fs_shim_nonlocal_scheme(spark, tmp_path, sf_dir):
     ][0]
     n = fs.parquet_row_count(spark, fs.join(base, "pq", name))
     assert n == region.count()
+    # footer null counts, through parquet-hadoop and through pyarrow
+    spark.createDataFrame(
+        [(1, None, b"a" * 5000), (None, None, None), (3, "c", b"b" * 5000)],
+        "id long, s string, blob binary",
+    ).coalesce(1).write.mode("overwrite").parquet(f"file://{tmp_path}/backing/nulls")
+    name = [
+        f for f in fs.list_names(spark, fs.join(base, "nulls")) if f.endswith(".parquet")
+    ][0]
+    for nulls_dir in (fs.join(base, "nulls"), f"{tmp_path}/backing/nulls"):
+        path = fs.join(nulls_dir, name)
+        assert fs.parquet_footer_counts(spark, path, ["id", "s"]) == (3, {"id": 1, "s": 2})
+        # written without truncated statistics, the >4 KB binary chunk
+        # has no null_count: refused, never guessed
+        with pytest.raises(ValueError, match="no null_count for column 'blob'"):
+            fs.parquet_footer_counts(spark, path, ["blob"])
     assert fs.delete(spark, fs.join(base, "m"), recursive=True)
 
 

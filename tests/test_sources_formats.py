@@ -2,12 +2,14 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from parquet_export_spark.functions.udtf import register_udtfs
 from parquet_export_spark.sources import formats as FM
-from parquet_export_spark.sources.lake import load_table
+from parquet_export_spark.sources.lake import load_table, table_path
 
 
 def test_csv_roundtrip(spark, sf_dir, tmp_path):
@@ -312,3 +314,62 @@ def test_jsonl_overwrite_collision_keeps_old_until_swap(spark, tmp_path):
     assert on_disk == set(second)  # old generation retired post-swap
     back = spark.read.json(os.path.join(out, "shard-*.jsonl"))
     assert back.count() == 10
+
+
+def _job_ids(spark, fn) -> tuple[object, list[int]]:
+    """``fn()`` and the ids of the Spark jobs it submitted."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs submitted by one call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_reads_spark_written_schema_without_a_job(spark, tmp_path):
+    """A Spark-written flat directory or single file: the schema comes
+    from the footer Spark's writer stored it in, read on the driver,
+    and equals what Spark's inference (a one-task job) gives."""
+    import shutil
+    from datetime import date
+    from decimal import Decimal
+
+    df = spark.createDataFrame(
+        [(1, "a", Decimal("1.50"), date(2024, 1, 2), [1, 2], {"k": "v"}, (1.5, b"x"))],
+        "id long not null, s string, d decimal(9,2), day date, arr array<int>,"
+        " m map<string,string>, st struct<f: double, b: binary>",
+    )
+    df.repartition(2).write.parquet(str(tmp_path / "flat"))
+    part = sorted(p for p in os.listdir(tmp_path / "flat") if p.endswith(".parquet"))[0]
+    shutil.copy(tmp_path / "flat" / part, tmp_path / "single.parquet")
+    df.write.partitionBy("day").parquet(str(tmp_path / "parted"))
+    for name in ("flat", "single"):
+        got, jobs = _job_ids(spark, lambda: load_table(spark, str(tmp_path), name))
+        assert jobs == [], name
+        want = spark.read.parquet(table_path(str(tmp_path), name))
+        assert got.schema == want.schema, name
+        assert sorted(got.collect()) == sorted(want.collect()), name
+    # partition subdirectories keep Spark's inference (the partition column)
+    got = load_table(spark, str(tmp_path), "parted")
+    assert got.schema == spark.read.parquet(str(tmp_path / "parted")).schema
+    assert "day" in got.columns
+
+
+def test_load_table_keeps_inference_for_pyarrow_lakes(spark, sf_dir):
+    """The pyarrow-written star lake stores no Spark schema: every
+    table keeps Spark's inferred schema, and ``events.ts``
+    (TIMESTAMP(NANOS), read as BIGINT) is still restored to
+    timestamp_ntz."""
+    from parquet_export_spark.sources.lake import STAR_TABLES, _restore_nanos_columns
+
+    for name in STAR_TABLES:
+        inferred = spark.read.parquet(table_path(sf_dir, name))
+        want = _restore_nanos_columns(inferred, name).schema
+        assert load_table(spark, sf_dir, name).schema == want, name
+    ts = load_table(spark, sf_dir, "events").schema["ts"].dataType
+    assert isinstance(ts, T.TimestampNTZType)
